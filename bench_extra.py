@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -55,13 +56,15 @@ def main() -> None:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-        s = sorted(runs)
         out[name] = {
             "runs": runs,
-            "min": s[0],
-            "median": s[len(s) // 2],
+            "min": min(runs),
+            "median": statistics.median(runs),
         }
-        print(f"{name}: min={s[0]} median={s[len(s)//2]} runs={runs}")
+        print(
+            f"{name}: min={out[name]['min']} "
+            f"median={out[name]['median']} runs={runs}"
+        )
     print(json.dumps(out))
     spark.stop()
 

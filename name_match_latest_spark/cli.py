@@ -190,7 +190,12 @@ def run(argv: list[str] | None = None) -> int:
         out = None
         for lr in results:
             lvl = lr.matches.withColumn("level", F.lit(lr.level))
-            out = lvl if out is None else out.unionByName(lvl)
+            # fuzzy levels carry score columns the exact ones lack
+            out = (
+                lvl
+                if out is None
+                else out.unionByName(lvl, allowMissingColumns=True)
+            )
             print(f"level {lr.level}: {lr.match_count} matches")
         n = _write(out)
     else:

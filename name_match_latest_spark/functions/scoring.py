@@ -39,7 +39,6 @@ from .similarity import jaro_winkler, levenshtein, sim_levenshtein_pct
 
 __all__ = [
     "PersonCache",
-    "build_cache",
     "classify_full",
     "classify_no_mid",
     "classify_cached_full",
@@ -68,10 +67,6 @@ class PersonCache:
         self.simple_full_no_mid = simple_full_name_no_mid(first, last)
         self.dmeta_full = dmeta_code_from_simple(self.simple_full)
         self.dmeta_no_mid = dmeta_code_from_simple(self.simple_full_no_mid)
-
-
-def build_cache(first: str | None, mid: str | None, last: str | None) -> PersonCache:
-    return PersonCache(first, mid, last)
 
 
 def _cascade(

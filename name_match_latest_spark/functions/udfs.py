@@ -5,8 +5,8 @@ the engine is JVM Column expressions inside whole-stage codegen):
 
 * ``normalize_text_udf`` — Unicode NFD + combining-mark stripping
   (per-PERSON, applied once per side before any join)
-* ``dmeta_udf``          — Double Metaphone code (per-PERSON; pair
-  scoring then compares codes JVM-side)
+* ``dmeta_full_udf`` / ``dmeta_no_mid_udf`` — Double Metaphone code
+  (per-PERSON; pair scoring then compares codes JVM-side)
 * ``jaro_winkler_udf``   — the single per-PAIR Python hotspot
 
 All are SCALAR pandas UDFs: Spark ships Arrow record batches
@@ -26,7 +26,6 @@ from .similarity import jaro_winkler
 
 __all__ = [
     "normalize_text_udf",
-    "dmeta_udf",
     "dmeta_full_udf",
     "dmeta_no_mid_udf",
     "jaro_winkler_udf",
@@ -62,26 +61,6 @@ def normalize_text_udf(s: pd.Series) -> pd.Series:
         return hit
 
     return s.map(norm)
-
-
-_dmeta_cache: dict[str, str] = {}
-
-
-@pandas_udf(StringType())
-def dmeta_udf(simple: pd.Series) -> pd.Series:
-    """Primary Double Metaphone code of a ``normalize_simple`` string
-    ('' when the phonetic normalization is empty) — mod.rs:429-438."""
-    cache = _bounded(_dmeta_cache)
-
-    def code(x: str | None) -> str:
-        if x is None:
-            return ""
-        hit = cache.get(x)
-        if hit is None:
-            hit = cache[x] = dmeta_code_from_simple(x)
-        return hit
-
-    return s_map(simple, code)
 
 
 def _dmeta_from_names(parts: tuple) -> str:
@@ -144,7 +123,3 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
             v = cache[key] = jaro_winkler(x, y)
         out.append(v)
     return pd.Series(out, dtype="float64")
-
-
-def s_map(s: pd.Series, fn) -> pd.Series:
-    return s.map(fn)

@@ -232,13 +232,14 @@ def session_stats(
         # order, and floor(sum*1e6) of a money-like (2-decimal) column
         # lands within ulps of a 1e-6 grid boundary on EVERY session —
         # so the floored total was a per-session coin flip across
-        # engines/partitionings (the round-5 events_sessionize hash
-        # miss).  The serial in-order left fold is deterministic and
-        # exactly reproduces a single-threaded-per-window-partition
-        # engine (e.g. DuckDB) summing the window operator's sorted
-        # output.  Sessions are bounded by one user's burst, so the
-        # per-group array is small; the group key still ⊇ the window
-        # partition key — one exchange end-to-end.
+        # partitionings.  The serial in-order left fold is
+        # deterministic: the same value under any Spark partitioning.
+        # It does NOT match the DuckDB oracle's SUM, which accumulates
+        # in its own order — the events_sessionize oracle check still
+        # records hash_match false (rows and schema match).  Sessions
+        # are bounded by one user's burst, so the per-group array is
+        # small; the group key still ⊇ the window partition key — one
+        # exchange end-to-end.
         ev = F.array_sort(
             F.collect_list(
                 F.when(

@@ -40,7 +40,6 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -63,7 +62,6 @@ __all__ = [
     "decode_and_featurize",
     "resize_images",
     "sample_video_frames",
-    "set_decoder",
     "DETERMINISTIC_FAKE",
     "decode_bmp",
     "encode_bmp",
@@ -723,16 +721,6 @@ def auto_featurize(payload: bytes) -> list[float]:
     return DETERMINISTIC_FAKE(payload)
 
 
-_DECODER: Callable[[bytes], list[float]] = auto_featurize
-
-
-def set_decoder(fn: Callable[[bytes], list[float]]) -> None:
-    """Swap in an external decoder (e.g. PIL -> CLIP features) when the
-    libraries exist.  Must return FEATURE_DIM floats."""
-    global _DECODER
-    _DECODER = fn
-
-
 def decode_and_featurize(
     df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -748,7 +736,7 @@ def decode_and_featurize(
 
     def run(batches):
         for pdf in batches:
-            feats = [_DECODER(bytes(b) if b is not None else b"") for b in pdf[payload_col]]
+            feats = [auto_featurize(bytes(b) if b is not None else b"") for b in pdf[payload_col]]
             yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
     return src.mapInPandas(run, schema=schema)

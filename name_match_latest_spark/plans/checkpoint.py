@@ -20,7 +20,19 @@ import json
 import os
 import time
 
-__all__ = ["AuditLog", "group_expr"]
+__all__ = ["AuditLog", "atomic_write", "group_expr"]
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Durable atomic replace of ``path``: write a ``.tmp`` sibling,
+    flush + fsync it, then ``os.replace`` — readers see the old content
+    or the new, never a torn file (checkpoint.rs:3-126 semantics)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def group_expr(key_col, n_groups: int):
@@ -67,12 +79,7 @@ class AuditLog:
             "committed_at": time.time(),
             **metrics,
         }
-        tmp = self._path(group) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._path(group))
+        atomic_write(self._path(group), json.dumps(rec))
 
     def records(self) -> list[dict]:
         out = []

@@ -27,6 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.checkpoint import atomic_write
+
 __all__ = ["SnapshotTable"]
 
 
@@ -41,54 +43,23 @@ class SnapshotTable:
         self,
         df: DataFrame,
         parent: str | None = None,
-        bucket_by: tuple[str, int] | None = None,
         row_count: int | None = None,
     ) -> str:
         """Write a new immutable snapshot (full replacement), returns
-        its id.  ``bucket_by`` keeps the table's bucket layout across
-        compactions (see :meth:`append`).  ``row_count``, when the
-        caller already knows it, is recorded in the manifest as the
-        table's ``total_rows`` — Iceberg-style snapshot summary stats
-        that make size-based maintenance triggers O(1) manifest reads
-        instead of table scans."""
-        snap_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        if bucket_by is not None:
-            self._write_bucketed(df, data_dir, bucket_by)
-        else:
-            df.write.mode("errorifexists").parquet(data_dir)
-        paths = self._collect_data_files(data_dir)
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": parent if parent is not None else self.current_snapshot(),
-            "committed_at": time.time(),
-            "file_paths": paths,
-            "total_rows": row_count,
-            "bucket_by": (
-                {"col": bucket_by[0], "n": bucket_by[1]}
-                if bucket_by is not None
-                else None
-            ),
-            "file_buckets": {
-                p: b
-                for p in paths
-                if (b := self._bucket_of_path(p)) is not None
+        its id.  ``row_count``, when the caller already knows it, is
+        recorded in the manifest as the table's ``total_rows`` —
+        Iceberg-style snapshot summary stats that make size-based
+        maintenance triggers O(1) manifest reads instead of table
+        scans."""
+        snap_id, paths = self._write_data(df)
+        return self._publish(
+            snap_id,
+            {
+                "parent": parent if parent is not None else self.current_snapshot(),
+                "file_paths": paths,
+                "total_rows": row_count,
             },
-        }
-        mpath = os.path.join(self.path, "snapshots", f"{snap_id}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)
-        head_tmp = os.path.join(self.path, "HEAD.tmp")
-        with open(head_tmp, "w") as f:
-            f.write(snap_id)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, os.path.join(self.path, "HEAD"))
-        return snap_id
+        )
 
     def _watermark_path(self, query_id: str) -> str:
         safe = "".join(c for c in query_id if c.isalnum() or c in "-_")[:80]
@@ -124,51 +95,36 @@ class SnapshotTable:
             snap = m.get("parent")
         return wm
 
-    @staticmethod
-    def _write_bucketed(
-        df: DataFrame, data_dir: str, bucket_by: tuple[str, int]
-    ) -> None:
-        """Hash-bucketed write: repartition ON the bucket expression
-        first so each task holds whole buckets — a naive partitionBy
-        writes up to tasks x buckets tiny files."""
-        from pyspark.sql import functions as F
-
-        col, n = bucket_by
-        (
-            df.withColumn("_bucket", F.pmod(F.col(col), F.lit(n)))
-            .repartition(n, F.col("_bucket"))
-            .write.mode("errorifexists")
-            .partitionBy("_bucket")
-            .parquet(data_dir)
+    def _write_data(self, df: DataFrame) -> tuple[str, list[str]]:
+        """Write ``df`` under a fresh snapshot id; returns the id and
+        the written parquet files."""
+        snap_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+        data_dir = os.path.join(self.path, "data", snap_id)
+        df.write.mode("errorifexists").parquet(data_dir)
+        files = sorted(
+            os.path.join(data_dir, f)
+            for f in os.listdir(data_dir)
+            if f.endswith(".parquet")
         )
+        return snap_id, files
 
-    @staticmethod
-    def _collect_data_files(data_dir: str) -> list[str]:
-        """All parquet files under a snapshot's data dir, recursively
-        (bucketed writes produce `_bucket=K/` partition subdirs)."""
-        out = []
-        for root, _, files in os.walk(data_dir):
-            for f in files:
-                if f.endswith(".parquet"):
-                    out.append(os.path.join(root, f))
-        return sorted(out)
-
-    @staticmethod
-    def _bucket_of_path(path: str) -> int | None:
-        for part in path.split(os.sep):
-            if part.startswith("_bucket="):
-                try:
-                    return int(part.split("=", 1)[1])
-                except ValueError:
-                    return None
-        return None
+    def _publish(self, snap_id: str, manifest: dict) -> str:
+        """Make a written snapshot visible: the manifest becomes
+        durable first, then HEAD flips to it — a crash in between
+        leaves HEAD on the parent and the new manifest unreferenced."""
+        manifest = {"snapshot_id": snap_id, "committed_at": time.time(), **manifest}
+        atomic_write(
+            os.path.join(self.path, "snapshots", f"{snap_id}.json"),
+            json.dumps(manifest),
+        )
+        atomic_write(os.path.join(self.path, "HEAD"), snap_id)
+        return snap_id
 
     def append(
         self,
         df: DataFrame,
         batch_id: int | None = None,
         query_id: str = "default",
-        bucket_by: tuple[str, int] | None = None,
         row_count: int | None = None,
     ) -> str | None:
         """Iceberg-style APPEND commit: writes ONLY the new rows' files
@@ -196,75 +152,35 @@ class SnapshotTable:
         parent total + batch rows, ``None`` as soon as any link in the
         chain lacks a count (a later ``commit`` with a count restores
         tracking).  See :meth:`total_rows`.
-
-        ``bucket_by=(col, n)`` writes the batch hash-bucketed on
-        ``pmod(col, n)`` into `_bucket=K/` partition subdirs and
-        records each file's bucket in the manifest —
-        :meth:`read_buckets` then prunes point-lookup reads to the
-        touched buckets only (Iceberg bucket-partition pruning).  Use
-        the same spec on every append to one table.
         """
         if batch_id is not None:
             last = self.last_batch_id(query_id)
             if last is not None and batch_id <= last:
                 return None  # replayed batch — already committed
         parent = self.current_snapshot()
-        snap_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        data_dir = os.path.join(self.path, "data", snap_id)
-        if bucket_by is not None:
-            self._write_bucketed(df, data_dir, bucket_by)
-        else:
-            df.write.mode("errorifexists").parquet(data_dir)
-        new_files = self._collect_data_files(data_dir)
+        snap_id, new_files = self._write_data(df)
         parent_paths = self._file_paths(parent) if parent is not None else []
-        parent_manifest = self._manifest(parent) if parent is not None else {}
-        file_buckets = dict(parent_manifest.get("file_buckets") or {})
-        for p in new_files:
-            b = self._bucket_of_path(p)
-            if b is not None:
-                file_buckets[p] = b
-        parent_total = parent_manifest.get("total_rows") if parent is not None else 0
-        manifest = {
-            "snapshot_id": snap_id,
-            "parent": parent,
-            "committed_at": time.time(),
-            "file_paths": parent_paths + new_files,
-            "total_rows": (
-                parent_total + row_count
-                if parent_total is not None and row_count is not None
-                else None
-            ),
-            "batch_id": batch_id,
-            "query_id": query_id if batch_id is not None else None,
-            "bucket_by": (
-                {"col": bucket_by[0], "n": bucket_by[1]}
-                if bucket_by is not None
-                else parent_manifest.get("bucket_by")
-            ),
-            "file_buckets": file_buckets,
-        }
-        mpath = os.path.join(self.path, "snapshots", f"{snap_id}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)
-        head_tmp = os.path.join(self.path, "HEAD.tmp")
-        with open(head_tmp, "w") as f:
-            f.write(snap_id)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(head_tmp, os.path.join(self.path, "HEAD"))
+        parent_total = (
+            self._manifest(parent).get("total_rows") if parent is not None else 0
+        )
+        self._publish(
+            snap_id,
+            {
+                "parent": parent,
+                "file_paths": parent_paths + new_files,
+                "total_rows": (
+                    parent_total + row_count
+                    if parent_total is not None and row_count is not None
+                    else None
+                ),
+                "batch_id": batch_id,
+                "query_id": query_id if batch_id is not None else None,
+            },
+        )
         if batch_id is not None:
             wm = self._watermark_path(query_id)
             os.makedirs(os.path.dirname(wm), exist_ok=True)
-            wm_tmp = wm + ".tmp"
-            with open(wm_tmp, "w") as f:
-                f.write(str(batch_id))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(wm_tmp, wm)
+            atomic_write(wm, str(batch_id))
         return snap_id
 
     def snapshot_before(self, batch_id: int, query_id: str) -> str | None:
@@ -335,8 +251,8 @@ class SnapshotTable:
         if os.path.isdir(data_root):
             for snap_dir in os.listdir(data_root):
                 full = os.path.join(data_root, snap_dir)
-                # walk bottom-up: bucketed layouts nest `_bucket=K/`
-                # subdirs, pruned dirs are removed once emptied
+                # walk bottom-up: nested subdirs are removed once
+                # emptied
                 for root, dirs, files in os.walk(full, topdown=False):
                     for f in files:
                         p = os.path.abspath(os.path.join(root, f))
@@ -408,42 +324,3 @@ class SnapshotTable:
         if snap_id is None:
             raise FileNotFoundError(f"no snapshot committed at {self.path}")
         return spark.read.parquet(*self._file_paths(snap_id))
-
-    def bucket_spec(self, snapshot_id: str | None = None) -> tuple[str, int] | None:
-        snap_id = snapshot_id or self.current_snapshot()
-        if snap_id is None:
-            return None
-        spec = self._manifest(snap_id).get("bucket_by")
-        return (spec["col"], int(spec["n"])) if spec else None
-
-    def read_buckets(
-        self,
-        spark: SparkSession,
-        values,
-        snapshot_id: str | None = None,
-    ) -> DataFrame:
-        """Point-lookup read: only files whose bucket can contain one
-        of ``values`` (ints, hashed as ``pmod(v, n)`` — the same
-        function the writer used).  Files written without bucketing
-        are always included (correctness over pruning).  Falls back to
-        a full read when the table has no bucket spec.  The DataFrame
-        still needs the exact filter/join on top — pruning shrinks the
-        scan, it does not apply the predicate."""
-        snap_id = snapshot_id or self.current_snapshot()
-        if snap_id is None:
-            raise FileNotFoundError(f"no snapshot committed at {self.path}")
-        m = self._manifest(snap_id)
-        spec = m.get("bucket_by")
-        if not spec:
-            return spark.read.parquet(*self._file_paths(snap_id))
-        n = int(spec["n"])
-        wanted = {int(v) % n for v in values}
-        file_buckets = m.get("file_buckets") or {}
-        keep = [
-            p
-            for p in self._file_paths(snap_id)
-            if file_buckets.get(p) is None or file_buckets[p] in wanted
-        ]
-        if not keep:  # schema must survive an empty selection
-            return self.read(spark, snap_id).limit(0)
-        return spark.read.parquet(*keep)

@@ -39,8 +39,7 @@ never reshuffled beyond the blocking join; NO per-batch operation
 shuffles the corpus: every aggregation and join in the label
 maintenance path is over O(batch + touched-component) rows, and the
 only corpus-wide work is the label-log parquet SCAN under a broadcast
-filter (at Iceberg scale, partition the log by a component bucket and
-that scan prunes too).  The full resolve (groupBy over the whole log)
+filter.  The full resolve (groupBy over the whole log)
 happens only on READ (``current_labels``/``cluster_members``) and in
 ``compact_labels``.
 """
@@ -57,7 +56,7 @@ from pyspark.sql.window import Window
 from ..operators.blocking import pair_join
 from ..operators.clustering import connected_components
 from ..operators.scoring import score_pairs
-from ..plans.checkpoint import AuditLog
+from ..plans.checkpoint import AuditLog, atomic_write
 from ..plans.web_pipeline import _block_key, prepare_mentions
 from ..sources.tables import SnapshotTable
 
@@ -82,11 +81,6 @@ BROADCAST_BATCH_MAX = 500_000
 #: as the batch operator's ``dedup.AUTO_BUCKET_CAP``
 WITHIN_BATCH_BUCKET_CAP = 100
 
-#: band rows per doc in the gate's LSH (minhash_bands default bands=4)
-#: — sizes the can-the-band-probe-prune heuristic under corpus_buckets
-GATE_BANDS_PER_DOC = 4
-
-
 
 class IncrementalClusterer:
     """``dedup_threshold`` enables the ingest near-dup gate: each
@@ -104,49 +98,10 @@ class IncrementalClusterer:
         spark: SparkSession,
         state_dir: str,
         dedup_threshold: float | None = None,
-        label_buckets: int | None = None,
         compact_factor: float | None = 4.0,
         compact_max_files: int = 256,
-        corpus_buckets: int | None = None,
     ) -> None:
-        """``label_buckets`` enables Iceberg-style bucket pruning on
-        the label log (files partitioned by pmod(node, N); endpoint
-        and merged-component lookups read only touched buckets).
-        Worth it ONLY when a typical increment's endpoint set touches
-        a small fraction of buckets — i.e. the huge-corpus/small-batch
-        regime with N sized to ~corpus/10^7 (measured at sandbox
-        scale, where every batch touches all buckets, the layout
-        overhead exceeds the pruning gain — hence opt-in).
-
-        ``corpus_buckets`` applies the same layout to the dedup gate's
-        CORPUS-side tables — the gate's only per-batch terms that grow
-        with corpus size (measured decomposition in BASELINE.md round
-        5).  ``docs`` is laid out bucketed by pmod(crc32(doc_id), N)
-        so the candidate-text fetch for near-dup verification (the
-        text column is the heavy read) touches only the bucket files
-        that can hold a candidate id; ``docs_bands`` by
-        pmod(crc32(band_hash), N) so the corpus band equi-join reads
-        only the band buckets the batch occupies.  The layout is
-        established and maintained by :meth:`compact_corpus` (auto-
-        triggered via ``compact_max_files``): per-batch appends stay
-        flat single files and fold into the bucketed base
-        periodically, so probes read [pruned base + flat tail] — the
-        Iceberg small-file/bin-packing write path.  Same regime caveat
-        as ``label_buckets``: the probe-bucket set must be a small
-        fraction of N, i.e. small ticks against a huge corpus (a 10k-
-        row backfill batch touches every bucket and pays the layout's
-        file-count overhead for nothing).  The byte-exact text_hash
-        semi-join stays a full scan on purpose: it reads ONE thin
-        column, and its probe set (every batch hash) always spans all
-        buckets.  Buckets are layout only — every exact join/filter
-        still applies on top, so results are invariant (asserted by
-        tests/test_incremental_cluster.py).  Like ``label_buckets``,
-        pick the value when the state dir is created and keep it:
-        pre-existing files written without the key column stay
-        readable (read_buckets always includes unbucketed files) but
-        never prune.
-
-        ``compact_factor`` wires label-log compaction into the batch
+        """``compact_factor`` wires label-log compaction into the batch
         loop itself (a long-running crawl must not depend on an
         operator remembering to call :meth:`maintain`):
         after a batch commits, the log is folded into a fresh base when
@@ -159,20 +114,16 @@ class IncrementalClusterer:
         (``SnapshotTable.total_rows`` / manifest file list), so the
         check costs no table scan per batch.  ``compact_max_files``
         also bounds the gate's corpus tables (docs / docs_bands) via
-        :meth:`compact_corpus` — essential under ``corpus_buckets``,
-        where every append fans out to one file per occupied bucket.
-        ``compact_factor=None`` disables auto-compaction (manual
-        :meth:`maintain` only)."""
+        :meth:`compact_corpus`.  ``compact_factor=None`` disables
+        auto-compaction (manual :meth:`maintain` only)."""
         self.spark = spark
         self.mentions = SnapshotTable(os.path.join(state_dir, "mentions"))
         self.edges = SnapshotTable(os.path.join(state_dir, "edges"))
         self.labels = SnapshotTable(os.path.join(state_dir, "labels"))
         self.audit = AuditLog(os.path.join(state_dir, "audit"), "incremental-v1")
         self.dedup_threshold = dedup_threshold
-        self.label_buckets = label_buckets
         self.compact_factor = compact_factor
         self.compact_max_files = compact_max_files
-        self.corpus_buckets = corpus_buckets
         self._epochs: dict[str, int] = {}
         if dedup_threshold is not None:
             self.docs = SnapshotTable(os.path.join(state_dir, "docs"))
@@ -265,12 +216,7 @@ class IncrementalClusterer:
             pass
         epoch = prior + 1
         os.makedirs(d, exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"epoch": epoch, "lineage": lineage}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, p)
+        atomic_write(p, json.dumps({"epoch": epoch, "lineage": lineage}))
         self._epochs[lineage] = epoch
         return epoch
 
@@ -313,7 +259,6 @@ class IncrementalClusterer:
             )
             .localCheckpoint(eager=True)
         )
-        n0 = batch.count()  # cheap (checkpointed); band-probe heuristic
         # 1. byte-exact within the batch (keep min url)
         w = Window.partitionBy("text_hash").orderBy("doc_id")
         batch = (
@@ -362,33 +307,14 @@ class IncrementalClusterer:
             batch = batch.join(
                 F.broadcast(dup_hashes.distinct()), "text_hash", "left_anti"
             )
-            # 3b. near-dup vs corpus: band equi-join (batch broadcast),
-            # corpus side bucket-pruned to the batch's band buckets
-            # when the table is bucketed (see __init__ corpus_buckets)
+            # 3b. near-dup vs corpus: band equi-join (batch broadcast)
             bands_snap = self.docs_bands.snapshot_before(
                 batch_id, f"{lineage}:docs_bands"
             )
-            batch_bands = bands_of(batch)
-            if self.corpus_buckets is None:
-                corpus_bands = self.docs_bands.read(spark, bands_snap)
-            else:
-                # a batch with >= N/4 rows occupies essentially every
-                # band bucket (4 near-uniform md5 band hashes per doc)
-                # — skip the probe job entirely and read full; only
-                # genuinely small ticks can prune the band table
-                probe = (
-                    self._touched_buckets(batch_bands, "band_hash")
-                    if GATE_BANDS_PER_DOC * n0 < self.corpus_buckets
-                    else None
-                )
-                corpus_bands = (
-                    self.docs_bands.read_buckets(spark, probe, bands_snap)
-                    if probe is not None
-                    else self.docs_bands.read(spark, bands_snap)
-                )
             cand = (
-                corpus_bands.join(
-                    F.broadcast(batch_bands.withColumnRenamed("doc_id", "d1")),
+                self.docs_bands.read(spark, bands_snap)
+                .join(
+                    F.broadcast(bands_of(batch).withColumnRenamed("doc_id", "d1")),
                     on=["band_id", "band_hash"],
                 )
                 .select("d1", F.col("doc_id").alias("d2"))
@@ -397,18 +323,8 @@ class IncrementalClusterer:
                 # lineage scans the full corpus band table
                 .localCheckpoint(eager=True)
             )
-            # candidate-TEXT fetch: the heavy corpus read (text column).
-            # When bucketed, read only the doc buckets holding a
-            # candidate — cand is tiny after banding, so this is the
-            # point-lookup regime the layout exists for.
-            if self.corpus_buckets is None:
-                fetch_docs = corpus
-            else:
-                fetch_docs = self.docs.read_buckets(
-                    spark, self._touched_buckets(cand, "d2"), docs_snap
-                )
             dup_batch_ids = (
-                self._verified_dups(cand, batch, fetch_docs)
+                self._verified_dups(cand, batch, corpus)
                 .select(F.col("d1").alias("doc_id"))
                 .distinct()
             )
@@ -416,46 +332,21 @@ class IncrementalClusterer:
 
         batch = batch.localCheckpoint(eager=True)
         n_batch = batch.count()
-        out_docs, out_bands = batch, bands_of(batch)
-        if self.corpus_buckets is not None:
-            out_docs = out_docs.withColumn("doc_key", F.crc32("doc_id"))
-            out_bands = out_bands.withColumn("band_key", F.crc32("band_hash"))
-        # appends stay FLAT and coalesced (a crawl tick is one file)
-        # even under corpus_buckets: bucketed per-batch writes would
-        # fan out to one file per occupied bucket per batch.  Instead
-        # compact_corpus periodically folds the flat tail into the
-        # bucketed base — read_buckets always includes unbucketed
-        # files, so the mixed layout reads correctly in between, and
-        # append() inherits the parent's bucket spec in the manifest.
+        # appends are coalesced (a crawl tick is one file)
         nparts = max(1, min(32, n_batch // 2_000_000 + 1))
         self.docs.append(
-            out_docs.coalesce(nparts),
+            batch.coalesce(nparts),
             batch_id=batch_id,
             query_id=f"{lineage}:docs",
             row_count=n_batch,
         )
         self.docs_bands.append(
-            out_bands.coalesce(nparts),
+            bands_of(batch).coalesce(nparts),
             batch_id=batch_id,
             query_id=f"{lineage}:docs_bands",
         )
         survivors = batch.select(F.col("doc_id").alias("url"))
         return pages.join(F.broadcast(survivors), "url", "left_semi")
-
-    def _touched_buckets(self, df: DataFrame, col: str) -> list[int]:
-        """Distinct corpus-bucket ids ``pmod(crc32(col), N)`` occupied
-        by ``df`` — the probe list for ``SnapshotTable.read_buckets``.
-        Collected via a map-side-partial ``collect_set`` (one short
-        job, no wide exchange); the result is bounded by N values
-        (same discipline as the label path's ``log_for_nodes``), never
-        by ``df``'s row count.  The crc32 here and the one
-        ``_dedup_gate`` stamps into the stored ``doc_key``/``band_key``
-        columns are the SAME Spark function, so probe and layout can
-        never disagree."""
-        row = df.select(
-            F.pmod(F.crc32(col), F.lit(self.corpus_buckets)).alias("b")
-        ).agg(F.collect_set("b").alias("bs")).collect()[0]
-        return list(row.bs)
 
     def _within_batch_candidates(self, bands: DataFrame) -> DataFrame:
         """(d1, d2) near-dup candidate pairs within ONE batch, with
@@ -646,11 +537,6 @@ class IncrementalClusterer:
                 delta,
                 batch_id=batch_id,
                 query_id=f"{lineage}:labels",
-                bucket_by=(
-                    ("node", self.label_buckets)
-                    if self.label_buckets is not None
-                    else None
-                ),
                 row_count=n_delta,
             )
         if delta_snap is not None:  # None = replay; already audited
@@ -673,11 +559,12 @@ class IncrementalClusterer:
         independent of corpus size (asserted value-equal to batch
         re-clustering by tests/test_incremental_cluster.py)."""
         spark = self.spark
-        empty = "node long, component long, version long"
         try:
             log = self.labels.read(spark)
         except FileNotFoundError:
-            log = spark.createDataFrame([], empty)
+            log = spark.createDataFrame(
+                [], "node long, component long, version long"
+            )
 
         endpoints = (
             new_edges.select(F.col("src").alias("node"))
@@ -687,35 +574,10 @@ class IncrementalClusterer:
             .localCheckpoint(eager=True)
         )
 
-        def log_for_nodes(nodes_df: DataFrame) -> DataFrame:
-            """Log rows restricted to files that can contain the given
-            nodes: manifest bucket pruning first when the table is
-            bucketed (reads only the touched `_bucket=K` files),
-            broadcast semi-join second."""
-            if self.label_buckets is None:
-                return log.join(F.broadcast(nodes_df), "node", "left_semi")
-            try:
-                pruned = self.labels.read_buckets(
-                    spark,
-                    [
-                        r.b
-                        for r in nodes_df.select(
-                            F.pmod(
-                                F.col("node"), F.lit(self.label_buckets)
-                            ).alias("b")
-                        )
-                        .distinct()
-                        .collect()
-                    ],
-                )
-            except FileNotFoundError:
-                return spark.createDataFrame([], empty)
-            return pruned.join(F.broadcast(nodes_df), "node", "left_semi")
-
         # current labels of the touched nodes ONLY
-        lab_e = resolve_labels(log_for_nodes(endpoints)).localCheckpoint(
-            eager=True
-        )
+        lab_e = resolve_labels(
+            log.join(F.broadcast(endpoints), "node", "left_semi")
+        ).localCheckpoint(eager=True)
 
         # condensed graph over touched components (tiny), then CC
         src_lab = lab_e.select(
@@ -750,7 +612,9 @@ class IncrementalClusterer:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        cand_current = resolve_labels(log_for_nodes(cand_nodes))
+        cand_current = resolve_labels(
+            log.join(F.broadcast(cand_nodes), "node", "left_semi")
+        )
         changed = cand_current.join(
             F.broadcast(remap), cand_current.component == F.col("_old"), "inner"
         ).select("node", F.col("_new").alias("component"))
@@ -847,9 +711,8 @@ class IncrementalClusterer:
             )
             if over_rows or n_files > self.compact_max_files:
                 self.compact_labels(expire=True)
-        # the gate's corpus tables accrete files per batch too — a
-        # BUCKETED layout up to one file per occupied bucket per
-        # append — and the gate's scans pay per-file open cost
+        # the gate's corpus tables accrete files per batch too, and
+        # the gate's scans pay per-file open cost
         if self.docs is not None:
             for t in (self.docs, self.docs_bands):
                 s = t.current_snapshot()
@@ -862,32 +725,25 @@ class IncrementalClusterer:
 
     def compact_corpus(self, expire: bool = True) -> None:
         """Fold the dedup gate's corpus tables (docs / docs_bands)
-        into single-base snapshots — Iceberg bin-packing.  A bucketed
-        layout otherwise accretes one file per occupied bucket per
-        batch, and every corpus scan (the byte-exact text_hash probe
-        reads the whole thin column) pays per-file open cost; the
-        rewrite restores one file per bucket (or a coalesced flat
-        layout when unbucketed).  Replay-safe from the auto trigger —
+        into single-base snapshots — Iceberg bin-packing.  Appends
+        otherwise accrete at least one file per batch, and every corpus
+        scan (the byte-exact text_hash probe reads the whole thin
+        column) pays per-file open cost; the rewrite restores a
+        coalesced base.  Replay-safe from the auto trigger —
         it runs only after a fully-committed batch, so a replay's
         ``snapshot_before`` pin still excludes that batch's own rows
         or skips everything at the append watermark.  A MANUAL call
         (``maintain``) must happen at a consistent stop point: folding
         a partially-committed batch's docs into the base would let its
         replay see its own rows as corpus duplicates."""
-        for name, key in (("docs", "doc_key"), ("docs_bands", "band_key")):
-            table = getattr(self, name)
+        for table in (self.docs, self.docs_bands):
             if table is None or table.current_snapshot() is None:
                 continue
             df = table.read(self.spark).localCheckpoint(eager=True)
             n = df.count()
-            spec = (
-                (key, self.corpus_buckets)
-                if self.corpus_buckets is not None and key in df.columns
-                else None
+            table.commit(
+                df.coalesce(max(1, min(32, n // 2_000_000 + 1))), row_count=n
             )
-            if spec is None:
-                df = df.coalesce(max(1, min(32, n // 2_000_000 + 1)))
-            table.commit(df, bucket_by=spec, row_count=n)
             if expire:
                 table.expire_snapshots(keep_last=1)
 
@@ -915,11 +771,6 @@ class IncrementalClusterer:
         n_base = base.count()
         snap = self.labels.commit(
             base.coalesce(max(1, min(32, n_base // 2_000_000 + 1))),
-            bucket_by=(
-                ("node", self.label_buckets)
-                if self.label_buckets is not None
-                else None
-            ),
             row_count=n_base,
         )
         if expire:

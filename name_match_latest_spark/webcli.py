@@ -53,20 +53,6 @@ def run(argv: list[str] | None = None) -> int:
     p.add_argument("--groups", type=int, default=8)
     p.add_argument("--stream-state", default=None)
     p.add_argument("--dedup-threshold", type=float, default=None)
-    p.add_argument(
-        "--label-buckets",
-        type=int,
-        default=None,
-        help="Iceberg-style bucket count for the label log "
-        "(huge-corpus/small-tick regime; see IncrementalClusterer)",
-    )
-    p.add_argument(
-        "--corpus-buckets",
-        type=int,
-        default=None,
-        help="bucket count for the dedup gate's corpus tables "
-        "(prunes the candidate-text fetch; same regime caveat)",
-    )
     args = p.parse_args(sys.argv[1:] if argv is None else argv)
 
     from .session import get_spark
@@ -83,8 +69,6 @@ def run(argv: list[str] | None = None) -> int:
             spark,
             args.stream_state,
             dedup_threshold=args.dedup_threshold,
-            label_buckets=args.label_buckets,
-            corpus_buckets=args.corpus_buckets,
         )
         q = clusterer.attach(
             stream_warc_pages(spark, args.input),

@@ -103,6 +103,25 @@ def test_cli_printed_count_equals_written_rows(tables):
     assert printed == len(_read_csv_rows(out))
 
 
+def test_cli_cascade_default_levels(spark, tables):
+    """The cascade at its default levels (1,2,3,10,11) unions exact
+    and fuzzy levels whose column sets differ; every printed level's
+    matches land in the written output."""
+    t1, t2, root = tables
+    out = os.path.join(root, "out_cascade")
+    res = _run_cli([t1, t2, "cascade", out, "--format", "parquet"])
+    assert res.returncode == 0, res.stderr[-2000:]
+    per_level = [
+        int(line.split(": ")[1].split()[0])
+        for line in res.stdout.splitlines()
+        if line.startswith("level ")
+    ]
+    assert len(per_level) == 5
+    written = spark.read.parquet(out).count()
+    assert written == sum(per_level) > 0
+    assert int(res.stdout.split("matches=")[1].split()[0]) == written
+
+
 def test_cli_jdbc_arg_requires_table_param(tables):
     """A jdbc: table arg is routed (not fed to spark.read.parquet);
     missing ?table= is a clean argparse-style error."""

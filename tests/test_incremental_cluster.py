@@ -109,37 +109,6 @@ def test_warc_directory_stream_feeds_clusterer(spark, tmp_path):
     )
 
 
-def test_bucketed_label_log_equivalent(spark, tmp_path):
-    """label_buckets=8 (pruned point lookups) must produce the exact
-    same assignments as the unbucketed default, across increments and
-    compaction."""
-    from name_match_latest_spark.sources.web import generate_webpages
-    from name_match_latest_spark.streaming.incremental_cluster import (
-        IncrementalClusterer,
-    )
-
-    pages = generate_webpages(spark, 160, seed=17).localCheckpoint()
-    half = pages.limit(80).localCheckpoint()
-    rest = pages.subtract(half).localCheckpoint()
-
-    results = {}
-    for name, buckets in (("plain", None), ("bucketed", 8)):
-        c = IncrementalClusterer(
-            spark, str(tmp_path / name), label_buckets=buckets
-        )
-        c.process_batch(half, batch_id=0)
-        c.process_batch(rest, batch_id=1)
-        if buckets:
-            c.compact_labels()
-        results[name] = sorted(
-            (r.id, r.cluster_id) for r in c.cluster_members().collect()
-        )
-    assert results["plain"] == results["bucketed"]
-    # the bucketed log actually carries the layout
-    c = IncrementalClusterer(spark, str(tmp_path / "bucketed"), label_buckets=8)
-    assert c.labels.bucket_spec() == ("node", 8)
-
-
 def test_replayed_batch_is_noop(spark, tmp_path):
     """Re-invoking process_batch with an already-committed batch id
     must not duplicate mentions, edges, or label deltas."""
@@ -695,13 +664,12 @@ def test_auto_compaction_bounds_label_log(spark, tmp_path):
     assert got == want
 
 
-def test_corpus_buckets_gate_equivalent_and_pruned(spark, tmp_path):
-    """corpus_buckets is LAYOUT ONLY: the bucketed gate makes the
-    identical ingest decisions (same surviving doc_ids, same final
-    clusters) as the unbucketed gate on the same batch sequence with
-    exact + near duplicates crossing batches — while the point-lookup
-    read provably touches FEWER files than the full corpus read
-    (DataFrame.inputFiles on the manifest-pruned scan)."""
+def test_corpus_gate_survivors_stable_across_compaction(spark, tmp_path):
+    """The gate's corpus tables keep their ingest decisions across
+    compaction: exact + near duplicates crossing batches are gated,
+    ``compact_corpus`` folds the appended files into one base without
+    changing the surviving doc_ids, and a batch after the compaction
+    is still gated against the compacted corpus."""
     from name_match_latest_spark.sources.web import generate_webpages
     from name_match_latest_spark.streaming.incremental_cluster import (
         IncrementalClusterer,
@@ -735,40 +703,28 @@ def test_corpus_buckets_gate_equivalent_and_pruned(spark, tmp_path):
         spark.createDataFrame(dups, base.schema)
     )
 
-    def run(name, buckets):
-        c = IncrementalClusterer(
-            spark,
-            str(tmp_path / name),
-            dedup_threshold=0.8,
-            corpus_buckets=buckets,
-        )
-        c.process_batch(b0, batch_id=0)
-        c.process_batch(b1, batch_id=1)
-        return c
+    c = IncrementalClusterer(
+        spark, str(tmp_path / "state"), dedup_threshold=0.8
+    )
+    c.process_batch(b0, batch_id=0)
+    c.process_batch(b1, batch_id=1)
 
-    plain = run("plain", None)
-    bucketed = run("bucketed", 8)
-
-    ids = lambda c: {
+    ids = lambda: {
         r.doc_id for r in c.docs.read(spark).select("doc_id").collect()
     }
-    assert ids(plain) == ids(bucketed)  # 80 survivors, 4 dups gated
-    assert len(ids(plain)) == 80
-    part = lambda c: _partition_of(
-        (r.id, r.cluster_id) for r in c.cluster_members().collect()
-    )
-    assert part(plain) == part(bucketed)
+    survivors = ids()
+    assert len(survivors) == 80  # 80 survivors, 4 dups gated
+    assert not any(u.startswith("https://mirror.") for u in survivors)
 
-    # appends stay FLAT (no layout until the first compaction folds
-    # the tail into a bucketed base)
-    assert bucketed.docs.bucket_spec() is None
-    bucketed.compact_corpus()
-    assert bucketed.docs.bucket_spec() == ("doc_key", 8)
-    assert bucketed.docs_bands.bucket_spec() == ("band_key", 8)
+    n_files = lambda t: len(t._file_paths(t.current_snapshot()))
+    assert n_files(c.docs) > 1  # one file per appended batch
+    c.compact_corpus()
+    assert n_files(c.docs) == 1 and n_files(c.docs_bands) == 1
+    assert c.docs.total_rows() == 80
+    assert ids() == survivors
 
-    # post-compaction batch reads the MIXED layout (bucketed base +
-    # flat tail): a near-dup of a compacted corpus row is still gated,
-    # a fresh page still ingests
+    # post-compaction batch: a near-dup of a compacted corpus row is
+    # still gated, a fresh page still ingests
     r1 = rows[1]
     b2 = spark.createDataFrame(
         [
@@ -792,20 +748,6 @@ def test_corpus_buckets_gate_equivalent_and_pruned(spark, tmp_path):
         ],
         base.schema,
     )
-    bucketed.process_batch(b2, batch_id=2)
-    after = ids(bucketed)
-    assert len(after) == 81
-    assert "https://late.example.com/en/article/802" in after
-    assert "https://late.example.com/en/article/801" not in after
-
-    some_id = sorted(ids(bucketed))[0]
-    probe = bucketed._touched_buckets(
-        spark.createDataFrame([(some_id,)], "doc_id string"), "doc_id"
-    )
-    assert len(probe) == 1 and 0 <= probe[0] < 8
-    pruned = bucketed.docs.read_buckets(spark, probe)
-    full = bucketed.docs.read(spark)
-    assert set(pruned.inputFiles()) < set(full.inputFiles())
-    # the pruned scan still contains the probed row (pruning never
-    # drops a bucket that can hold the key)
-    assert pruned.filter(F.col("doc_id") == some_id).count() == 1
+    c.process_batch(b2, batch_id=2)
+    after = ids()
+    assert after == survivors | {"https://late.example.com/en/article/802"}

@@ -78,56 +78,6 @@ def test_expire_after_compaction_deletes_dead_files(spark, tmp_path):
     assert {r.v for r in t.read(spark).collect()} == set(range(20))
 
 
-def test_bucketed_append_prunes_point_lookups(spark, tmp_path):
-    """bucket_by writes `_bucket=K` partition files; read_buckets on a
-    value set reads ONLY the touched buckets' files, and the pruned
-    result contains exactly the matching rows of the full read."""
-    from pyspark.sql import functions as F
-
-    from name_match_latest_spark.sources.tables import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "t"))
-    for b in range(2):
-        t.append(
-            spark.range(b * 100, b * 100 + 100).selectExpr("id AS node", "id * 10 AS component"),
-            batch_id=b,
-            query_id="q",
-            bucket_by=("node", 8),
-        )
-
-    full = t.read(spark)
-    assert full.count() == 200
-
-    probe = [5, 14]  # buckets 5 and 6
-    pruned = t.read_buckets(spark, probe)
-    # pruning is a superset filter: all probe rows present
-    got = {r.node for r in pruned.filter(F.col("node").isin(probe)).collect()}
-    assert got == set(probe)
-    # strictly fewer rows than the full table (files outside buckets
-    # 5/6 were never opened), and every kept row is in a wanted bucket
-    assert pruned.count() < 200
-    assert pruned.filter(~F.pmod(F.col("node"), F.lit(8)).isin([5, 6])).count() == 0
-
-    # empty probe set -> empty frame with intact schema
-    empty = t.read_buckets(spark, [])
-    assert empty.count() == 0 and set(empty.columns) == {"node", "component"}
-
-
-def test_bucketed_compaction_keeps_pruning(spark, tmp_path):
-    from name_match_latest_spark.sources.tables import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "t"))
-    t.append(
-        spark.range(50).selectExpr("id AS node", "id AS component"),
-        bucket_by=("node", 4),
-    )
-    t.commit(t.read(spark), bucket_by=("node", 4))
-    assert t.bucket_spec() == ("node", 4)
-    pruned = t.read_buckets(spark, [1])
-    assert pruned.count() < 50
-    assert {r.node % 4 for r in pruned.collect()} == {1}
-
-
 def test_total_rows_manifest_tracking(spark, tmp_path):
     """Manifest row-count stats: appends with row_count accumulate,
     any uncounted append poisons the total to None (honest unknown),
