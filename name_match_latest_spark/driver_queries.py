@@ -42,8 +42,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     Only metadata is memoized — the views stay lazy plans and every
     execution re-scans the parquet files; switching ``sf_dir`` within
     a session re-registers (the memo tracks the CURRENT dir, so
-    A->B->A ping-pong stays correct)."""
-    if getattr(spark, "_nm_views_dir", None) == sf_dir:
+    A->B->A ping-pong stays correct), and so does a dropped view
+    (``tableExists`` is a catalog lookup, not a Spark job)."""
+    if getattr(spark, "_nm_views_dir", None) == sf_dir and all(
+        spark.catalog.tableExists(t) for t in TABLES
+    ):
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)

@@ -105,9 +105,8 @@ def shingles_df(
     INTERPRETED per element — and measured 6.5x slower at sf0.1
     (3.7s vs 0.56s for 260k shingles); the batched Python loop
     vectorizes the per-doc work and ships results as Arrow.  The
-    streaming path keeps the Column form (_shingle_array) because
-    mapInPandas-free per-row expressions are what unbounded plans
-    need; test_dedup_minhash pins the two plans value-equal."""
+    Column form stays as ``_shingle_array``, the reference
+    test_dedup_minhash checks this plan against."""
     import pandas as pd
 
     def gen(batches):
@@ -279,6 +278,10 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
 
 
 def _shingle_array(text_col: Column, n: int) -> Column:
+    """Column-expression reference for :func:`shingles_df`: the same
+    distinct n-token shingles per row, as an array.
+    ``test_arrow_shingles_equal_column_plan_on_unicode_whitespace``
+    checks the Arrow plan against it."""
     toks = F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")
     if n <= 1:
         return F.array_distinct(toks)
@@ -292,69 +295,36 @@ def _shingle_array(text_col: Column, n: int) -> Column:
     )
 
 
-def minhash_signatures_wide(
-    docs: DataFrame, k: int = 8, shingle: int = 3, stream_safe: bool = False
-) -> DataFrame:
+def minhash_signatures_wide(docs: DataFrame, k: int = 8, shingle: int = 3) -> DataFrame:
     """(doc_id, sig_0..sig_{k-1}): MinHash signatures as int64 — one
     md5-derived 32-bit base hash per shingle, k affine mixes
     ``(a_i*h + b_i) mod 2^31-1`` (round-2 fix: one hash per shingle
     instead of k).
 
-    Two physically different plans, identical values:
+    Plan: shingle explode -> ONE groupBy(doc_id) with k
+    min-aggregates.  The k-way fan-out happens map-side inside
+    whole-stage codegen and partial aggregation collapses the shuffle
+    to one row per doc — measured 3x faster than the
+    higher-order-function form at sf0.1, because HOF lambdas
+    (ArrayTransform/ArrayMin) are CodegenFallback, i.e. interpreted
+    per element.
 
-    * default (batch): shingle explode -> ONE groupBy(doc_id) with k
-      min-aggregates.  The k-way fan-out happens map-side inside
-      whole-stage codegen and partial aggregation collapses the
-      shuffle to one row per doc — measured 3x faster than the
-      higher-order-function form at sf0.1, because HOF lambdas
-      (ArrayTransform/ArrayMin) are CodegenFallback, i.e. interpreted
-      per element.
-    * ``stream_safe=True``: per-row array_min/transform arithmetic —
-      NO aggregation at all, hence legal on an unbounded STREAMING
-      DataFrame (stream-static ingest dedup).  Slower per row
-      (interpreted HOFs) but stateless.
-
-    Docs with no shingles (< ``shingle`` tokens) emit no row in either
-    form, matching the DuckDB oracle.
+    Docs with no shingles (< ``shingle`` tokens) emit no row,
+    matching the DuckDB oracle.
     """
-    params = minhash_params(k)
-    if not stream_safe:
-        toks = shingles_df(docs, n=shingle) if shingle > 1 else tokens_df(docs)
-        h = (
-            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-            % F.lit(MINHASH_P)
+    toks = shingles_df(docs, n=shingle) if shingle > 1 else tokens_df(docs)
+    h = (
+        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+        % F.lit(MINHASH_P)
+    )
+    hashed = toks.withColumn("_h", h)
+    mins = [
+        F.min((F.col("_h") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(
+            f"sig_{i}"
         )
-        hashed = toks.withColumn("_h", h)
-        mins = [
-            F.min((F.col("_h") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                f"sig_{i}"
-            )
-            for i, (a, b) in enumerate(params)
-        ]
-        return hashed.groupBy("doc_id").agg(*mins)
-
-    def base_of(s: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-            % F.lit(MINHASH_P)
-        )
-
-    hs = F.transform(_shingle_array(F.col("text"), shingle), base_of)
-
-    def mix(a: int, b: int):
-        # factory closure: F.transform inspects the lambda's arity, so
-        # the inner lambda must take exactly one parameter
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("_hs"), mix(a, b))).alias(f"sig_{i}")
         for i, (a, b) in enumerate(minhash_params(k))
     ]
-    return (
-        docs.withColumn("_hs", hs)
-        .filter(F.size("_hs") > 0)
-        .select("doc_id", *sig_cols)
-    )
+    return hashed.groupBy("doc_id").agg(*mins)
 
 
 def minhash_signatures(docs: DataFrame, k: int = 8, shingle: int = 3) -> DataFrame:
@@ -376,17 +346,14 @@ def minhash_bands(
     k: int = 8,
     bands: int = 4,
     shingle: int = 3,
-    stream_safe: bool = False,
 ) -> DataFrame:
     """(doc_id, band_id, band_hash): banded LSH bucket assignments.
 
     rows_per_band = k // bands; band hash = md5 of the band's
     "h_idx|sig" strings joined in sorted order (byte-compatible with
-    the DuckDB oracle's array_sort construction).  Pass
-    ``stream_safe=True`` on a STREAMING frame (per-row signature plan,
-    no aggregation — see minhash_signatures_wide)."""
+    the DuckDB oracle's array_sort construction)."""
     rows_per_band = k // bands
-    wide = minhash_signatures_wide(docs, k, shingle=shingle, stream_safe=stream_safe)
+    wide = minhash_signatures_wide(docs, k, shingle=shingle)
     band_rows = []
     for b in range(bands):
         members = [

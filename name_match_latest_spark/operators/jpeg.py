@@ -15,8 +15,8 @@ Scope (the honest-raise list's last image entries, closed round 5):
   orthonormal IDCT run once at EOI.  Arithmetic-coded, lossless and
   hierarchical frames (SOF3/5/6/7/9+) raise ``NotImplementedError``
   honestly; malformed streams raise ``ValueError``.
-* ``encode_jpeg``: encoder used by tests and re-encode paths (resize
-  round-trip, MJPEG frame wrapping): 4:4:4 by default or
+* ``encode_jpeg``: encoder used by tests and by
+  ``scripts/gen_media_fixture.py``: 4:4:4 by default or
   2x2-subsampled chroma, configurable flat quantization (``quant=1``
   is near-lossless — the only loss is DCT rounding), optional restart
   interval, and ``progressive=True`` for an SOF2 14-scan script
@@ -34,8 +34,7 @@ spec does not mandate a bit-exact IDCT, so tests assert tight
 tolerances (and exactness of the entropy layer by construction).
 The entropy layer runs on an integer bit accumulator with a 16-bit
 Huffman LUT (measured 6.7x faster baseline / 4.6x progressive decode
-at 256x256 than the bit-at-a-time loop it replaced) — this is the
-per-image hot path inside featurize/resize mapInPandas workers.
+at 256x256 than the bit-at-a-time loop it replaced).
 """
 
 from __future__ import annotations
@@ -80,8 +79,7 @@ def _extend(bits: int, size: int) -> int:
 
 class _BitReader:
     """MSB-first reader over one entropy-coded segment (integer bit
-    accumulator — decode throughput matters because featurize/resize
-    run this per image inside mapInPandas workers)."""
+    accumulator)."""
 
     def __init__(self, data: bytes) -> None:
         self._data = data

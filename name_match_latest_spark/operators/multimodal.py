@@ -1,75 +1,44 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 A training-data pipeline treats media as ``binary`` payload columns
-with typed metadata alongside; transforms run as Arrow-batched
-``mapInPandas`` so each batch moves one Arrow buffer, never one row.
-
-Decode support (no PIL/ffmpeg in this container — these kernels are
-pure stdlib ``struct``/``zlib`` + numpy, i.e. REAL decodes, not stubs):
-
-* images — uncompressed 24-bit BMP, 8-bit PNG (DEFLATE via stdlib
-  zlib; gray/gray+alpha/RGB/RGBA/palette, all five scanline filters,
-  Adam7 interlace de-multiplexed via 7-pass strided reassembly) AND
-  GIF87a/89a (first frame; full variable-width LZW decode incl.
-  interlaced frames): decode, nearest-neighbor resize, re-encode
-  (GIF re-encodes via an adaptive median-cut-free palette only when
-  the resized frame has <=256 colors — true for nearest-neighbor
-  output of a GIF input — else falls back to PNG) AND Huffman-coded
-  DCT JPEG, both baseline sequential and progressive SOF2
-  (operators/jpeg.py: arbitrary Huffman tables, chroma subsampling,
-  restart markers, spectral selection + successive approximation;
-  arithmetic-coded streams still raise honestly).
-* audio  — RIFF/WAVE PCM16: real sample decode -> duration/RMS/ZCR/
-  peak features.
-* video  — RIFF/AVI with uncompressed '00db' DIB frames or MJPEG
-  '00dc' frames: real frame sampling by timestamp, frames re-wrapped
-  as standalone BMPs.  Non-MJPEG compressed codecs raise: they need
-  ffmpeg.
-* everything else — ``DETERMINISTIC_FAKE`` md5 features keep the
-  pipeline runnable end-to-end and byte-reproducible.
+with typed metadata alongside.  The metadata pass is pure Column
+expressions over a bounded header prefix: it stays JVM-side and never
+decodes a payload.
 
 Operators:
-* ``attach_media_metadata``  — sniff magic bytes -> media_kind, size
-* ``decode_and_featurize``   — binary -> fixed-dim float feature vector
-* ``resize_images``          — BMP binary -> BMP binary (target WxH)
-* ``sample_video_frames``    — AVI binary -> array of BMP frame payloads
+* ``attach_media_metadata`` — sniff magic bytes -> media_kind, size
+* ``attach_image_dims``     — pixel (width, height) from header bytes
+
+Codecs (no PIL/ffmpeg dependency — these kernels are pure stdlib
+``struct``/``zlib`` + numpy, i.e. REAL decodes, not stubs):
+uncompressed 24-bit BMP, 8-bit PNG (gray/gray+alpha/RGB/RGBA/palette,
+all five scanline filters, Adam7 interlace), GIF87a/89a (first frame,
+variable-width LZW incl. interlaced frames) and Huffman-coded DCT JPEG,
+baseline and progressive (``operators/jpeg.py``).  They are the
+full-decode reference ``tests/test_media_meta.py`` checks the
+header-scan dims against, and ``scripts/gen_media_fixture.py`` builds
+the committed ``media_meta`` fixture with the encoders.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 __all__ = [
     "attach_media_metadata",
     "attach_image_dims",
     "JPEG_SOF_OFF",
-    "decode_and_featurize",
-    "resize_images",
-    "sample_video_frames",
-    "DETERMINISTIC_FAKE",
     "decode_bmp",
     "encode_bmp",
     "decode_png",
     "encode_png",
     "decode_gif",
     "encode_gif",
-    "decode_wav_pcm16",
     "decode_jpeg",
     "encode_jpeg",
 ]
@@ -347,7 +316,7 @@ def decode_png(payload: bytes) -> np.ndarray:
         if plte is None:
             raise ValueError("palette PNG missing PLTE chunk")
         # clamp like decode_gif: an out-of-range index in a corrupt
-        # payload must not IndexError past featurize's fallback catch
+        # payload must not raise IndexError
         img = plte[np.minimum(img[:, :, 0], len(plte) - 1)]
     elif color == 0:  # gray
         img = np.repeat(img, 3, axis=2)
@@ -501,8 +470,8 @@ def decode_gif(payload: bytes) -> np.ndarray:
     decode_bmp/decode_png contract).  Real variable-width LZW decode,
     local/global color tables, interlaced frames de-multiplexed;
     extensions (incl. animation control) are skipped — frame 1 is the
-    representative for featurize/resize, matching how training
-    pipelines treat animated media."""
+    representative, matching how training pipelines treat animated
+    media."""
     if len(payload) < 14 or payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     packed = payload[10]
@@ -563,7 +532,7 @@ def decode_gif(payload: bytes) -> np.ndarray:
 def encode_gif(img: np.ndarray) -> bytes:
     """(H, W, 3) uint8 BGR -> single-frame GIF89a.  Requires <=256
     distinct colors (raises ValueError otherwise — GIF is a palette
-    format; resize_images falls back to PNG for such frames)."""
+    format)."""
     h, w = img.shape[:2]
     rgb = np.ascontiguousarray(img[:, :, ::-1], dtype=np.uint8).reshape(-1, 3)
     colors, idx = np.unique(rgb, axis=0, return_inverse=True)
@@ -587,259 +556,3 @@ def encode_gif(img: np.ndarray) -> bytes:
         out += chunk
     out += b"\x00\x3b"
     return bytes(out)
-
-
-def _resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    h, w = img.shape[:2]
-    yi = (np.arange(height) * h) // height
-    xi = (np.arange(width) * w) // width
-    return img[yi][:, xi]
-
-
-def _riff_chunks(buf: bytes, start: int, end: int):
-    """Yield (fourcc, payload_start, payload_size) walking a RIFF body."""
-    pos = start
-    while pos + 8 <= end:
-        fourcc, size = struct.unpack_from("<4sI", buf, pos)
-        yield fourcc, pos + 8, size
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-
-
-def decode_wav_pcm16(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """RIFF/WAVE PCM16 -> (sample_rate, channels, int16 samples)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAVE payload")
-    rate = channels = None
-    data = None
-    for fourcc, off, size in _riff_chunks(payload, 12, len(payload)):
-        if fourcc == b"fmt " and size >= 16:
-            fmt, channels, rate = struct.unpack_from("<HHI", payload, off)
-            bits = struct.unpack_from("<H", payload, off + 14)[0]
-            if fmt != 1 or bits != 16:
-                raise ValueError(f"unsupported WAVE encoding (fmt={fmt}, bits={bits})")
-        elif fourcc == b"data":
-            data = np.frombuffer(payload, dtype="<i2", count=size // 2, offset=off)
-    if rate is None or data is None:
-        raise ValueError("WAVE missing fmt/data chunks")
-    return rate, channels, data
-
-
-def _avi_frames(payload: bytes) -> tuple[float, bytes, list[tuple[str, bytes]]]:
-    """RIFF/AVI -> (seconds_per_frame, video strf BITMAPINFOHEADER,
-    [(kind, frame payload)]) with kind 'dib' (uncompressed '00db')
-    or 'jpeg' (MJPEG '00dc' — each chunk is a standalone baseline
-    JPEG, decoded by operators.jpeg).  Non-MJPEG '00dc' codecs
-    (cinepak/h264/...) still raise — those need ffmpeg."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-    spf, strf, frames = None, None, []
-
-    def walk(start: int, end: int) -> None:
-        nonlocal spf, strf
-        for fourcc, off, size in _riff_chunks(payload, start, end):
-            if fourcc == b"LIST":
-                walk(off + 4, off + size)  # skip the list-type fourcc
-            elif fourcc == b"avih":
-                spf = struct.unpack_from("<I", payload, off)[0] / 1e6
-            elif fourcc == b"strf" and strf is None:
-                strf = payload[off : off + size]
-            elif fourcc == b"00db":
-                frames.append(("dib", payload[off : off + size]))
-            elif fourcc == b"00dc":
-                data = payload[off : off + size]
-                if data[:3] == b"\xff\xd8\xff":
-                    frames.append(("jpeg", data))  # MJPEG
-                else:
-                    raise NotImplementedError(
-                        "compressed AVI stream ('00dc') beyond MJPEG "
-                        "requires ffmpeg, unavailable in this container "
-                        "— '00db' DIB and MJPEG frames decode here"
-                    )
-
-    walk(12, len(payload))
-    if spf is None or strf is None:
-        raise ValueError("AVI missing avih/strf headers")
-    return spf, strf, frames
-
-
-# --- feature extraction -------------------------------------------------------
-
-FEATURE_DIM = 16
-
-
-def DETERMINISTIC_FAKE(payload: bytes) -> list[float]:
-    """Deterministic fallback feature extractor: md5-derived floats.
-    Stands in for codecs this container cannot run (PNG/JPEG/MP3/MP4);
-    byte-identical across runs so downstream tests are exact."""
-    h = hashlib.md5(payload or b"").digest()
-    return [b / 255.0 for b in h[:FEATURE_DIM]]
-
-
-def _pad(feats: list[float]) -> list[float]:
-    feats = [float(min(max(x, 0.0), 1.0)) for x in feats[:FEATURE_DIM]]
-    return feats + [0.0] * (FEATURE_DIM - len(feats))
-
-
-def auto_featurize(payload: bytes) -> list[float]:
-    """Real features for formats we can decode (BMP pixels, WAV
-    samples); md5 fallback otherwise.  Slot 0 tags the path:
-    1.0 = image stats, 0.5 = audio stats, fallback = md5[0]/255."""
-    payload = payload or b""
-    try:
-        if (
-            payload[:2] == b"BM"
-            or payload[:8] == _PNG_SIG
-            or payload[:4] == b"GIF8"
-            or payload[:3] == b"\xff\xd8\xff"
-        ):
-            if payload[:2] == b"BM":
-                decode = decode_bmp
-            elif payload[:8] == _PNG_SIG:
-                decode = decode_png
-            elif payload[:4] == b"GIF8":
-                decode = decode_gif
-            else:
-                decode = decode_jpeg
-            img = decode(payload).astype(np.float64) / 255.0
-            h, w = img.shape[:2]
-            means = img.reshape(-1, 3).mean(axis=0)
-            stds = img.reshape(-1, 3).std(axis=0)
-            return _pad([1.0, w / 65535.0, h / 65535.0, *means, *stds])
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            rate, channels, samples = decode_wav_pcm16(payload)
-            x = samples.astype(np.float64) / 32768.0
-            dur = len(samples) / max(rate * channels, 1)
-            rms = float(np.sqrt(np.mean(x**2))) if len(x) else 0.0
-            zcr = float(np.mean(np.abs(np.diff(np.sign(x))) > 0)) if len(x) > 1 else 0.0
-            peak = float(np.max(np.abs(x))) if len(x) else 0.0
-            return _pad(
-                [0.5, min(dur / 3600.0, 1.0), rms, zcr, peak,
-                 channels / 8.0, rate / 192000.0]
-            )
-    except (ValueError, struct.error, zlib.error, NotImplementedError):
-        pass  # malformed/interlaced payload -> deterministic fallback
-    return DETERMINISTIC_FAKE(payload)
-
-
-def decode_and_featurize(
-    df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
-    """binary -> float[FEATURE_DIM] features via mapInPandas (one Arrow
-    batch per partition chunk; never per-row Python dispatch)."""
-    schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("features", ArrayType(FloatType()), False),
-        ]
-    )
-    src = df.select(id_col, payload_col)
-
-    def run(batches):
-        for pdf in batches:
-            feats = [auto_featurize(bytes(b) if b is not None else b"") for b in pdf[payload_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
-
-    return src.mapInPandas(run, schema=schema)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """binary -> binary resized image via mapInPandas.  REAL for
-    uncompressed 24-bit BMP, 8-bit PNG, GIF, and baseline JPEG
-    (stdlib struct/zlib + numpy decode, nearest-neighbor resample,
-    re-encoded in the input's own format); anything else raises at
-    execution time — those codecs need PIL/opencv."""
-    schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("resized", BinaryType(), False),
-            StructField("width", IntegerType(), False),
-            StructField("height", IntegerType(), False),
-        ]
-    )
-    src = df.select(id_col, payload_col)
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for b in pdf[payload_col]:
-                payload = bytes(b) if b is not None else b""
-                if payload[:2] == b"BM":
-                    decode, encode = decode_bmp, encode_bmp
-                elif payload[:8] == _PNG_SIG:
-                    decode, encode = decode_png, encode_png
-                elif payload[:4] == b"GIF8":
-                    decode, encode = decode_gif, encode_gif
-                elif payload[:3] == b"\xff\xd8\xff":
-                    decode, encode = decode_jpeg, encode_jpeg
-                else:
-                    raise NotImplementedError(
-                        "non-BMP/PNG/GIF/JPEG image resize requires "
-                        "PIL/opencv, unavailable in this container (BMP, "
-                        "8-bit PNG, GIF, and baseline JPEG decode here)"
-                    )
-                resized = _resize_nearest(decode(payload), width, height)
-                try:
-                    out.append(encode(resized))
-                except ValueError:
-                    # >256-color frame cannot round-trip to GIF —
-                    # fall back to lossless PNG rather than quantize
-                    out.append(encode_png(resized))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "resized": out,
-                    "width": [width] * len(out),
-                    "height": [height] * len(out),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_n_seconds: float = 1.0,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """video binary -> array<binary> frame samples via mapInPandas.
-    REAL for RIFF/AVI with uncompressed '00db' DIB frames or MJPEG
-    '00dc' frames (each a baseline JPEG, decoded by operators.jpeg),
-    sampled by timestamp and re-wrapped as standalone BMPs so every
-    emitted frame is uniform; other compressed codecs raise — they
-    need ffmpeg."""
-    schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("frames", ArrayType(BinaryType()), False),
-        ]
-    )
-    src = df.select(id_col, payload_col)
-
-    def run(batches):
-        for pdf in batches:
-            sampled = []
-            for b in pdf[payload_col]:
-                payload = bytes(b) if b is not None else b""
-                spf, strf, frames = _avi_frames(payload)
-                step = max(1, round(every_n_seconds / max(spf, 1e-9)))
-                picked = frames[::step]
-                wrapped = []
-                for kind, data in picked:
-                    if kind == "jpeg":
-                        wrapped.append(encode_bmp(decode_jpeg(data)))
-                        continue
-                    file_hdr = struct.pack(
-                        "<2sIHHI", b"BM", 14 + len(strf) + len(data), 0, 0, 14 + len(strf)
-                    )
-                    wrapped.append(file_hdr + strf + data)
-                sampled.append(wrapped)
-            yield pd.DataFrame({id_col: pdf[id_col], "frames": sampled})
-
-    return src.mapInPandas(run, schema=schema)

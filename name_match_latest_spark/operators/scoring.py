@@ -17,7 +17,7 @@ Stage layout (per candidate pair produced by a blocking join):
    mod.rs:2894 — cascade levels multiply back at their layer).
 
 Everything here expects the two sides' derived columns prefixed
-``t1_`` / ``t2_`` (see ``join_prepared`` in blocking.py).
+``t1_`` / ``t2_`` (see ``pair_join`` in blocking.py).
 """
 
 from __future__ import annotations

@@ -46,6 +46,7 @@ happens only on READ (``current_labels``/``cluster_members``) and in
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -60,7 +61,7 @@ from ..plans.checkpoint import AuditLog, atomic_write
 from ..plans.web_pipeline import _block_key, prepare_mentions
 from ..sources.tables import SnapshotTable
 
-__all__ = ["IncrementalClusterer", "resolve_labels"]
+__all__ = ["IncrementalClusterer", "checkpoint_lineage", "resolve_labels"]
 
 
 def resolve_labels(raw: DataFrame) -> DataFrame:
@@ -68,6 +69,33 @@ def resolve_labels(raw: DataFrame) -> DataFrame:
     return raw.groupBy("node").agg(
         F.max_by("component", "version").alias("component")
     )
+
+
+def checkpoint_lineage(checkpoint_dir: str, legacy_probe=None) -> str:
+    """Stable exactly-once lineage id for a checkpoint directory.
+
+    Canonicalized (realpath) before hashing: the SAME physical
+    checkpoint addressed via a different spelling (relative vs
+    absolute path, symlink, different cwd) must stay ONE lineage —
+    otherwise a crashed micro-batch replayed from it lands in a
+    "new" lineage, escapes batch-id dedup, and double-appends.
+
+    ``legacy_probe(lineage_id) -> bool`` (optional): pre-r4 versions
+    hashed the RAW spelling; a deployment that already committed
+    batches under that legacy id must keep it, or the watermark
+    resets and the next replay double-appends once.  The probe is
+    asked whether the legacy id has committed state; if yes (and the
+    canonical id has not), the legacy id stays sticky."""
+    canonical = hashlib.md5(
+        os.path.realpath(os.path.abspath(checkpoint_dir)).encode("utf-8")
+    ).hexdigest()[:16]
+    if legacy_probe is not None:
+        legacy = hashlib.md5(
+            checkpoint_dir.rstrip("/").encode("utf-8")
+        ).hexdigest()[:16]
+        if legacy != canonical and not legacy_probe(canonical) and legacy_probe(legacy):
+            return legacy
+    return canonical
 
 
 #: above this many batch mentions the batch side is no longer safely
@@ -656,8 +684,6 @@ class IncrementalClusterer:
         deployment that already committed under the raw-spelling id
         keeps it (probed via the mentions watermark) so its replay
         watermark survives the upgrade."""
-        from .stream_match import checkpoint_lineage
-
         lineage = checkpoint_lineage(
             checkpoint_dir,
             legacy_probe=lambda lid: self.mentions.last_batch_id(

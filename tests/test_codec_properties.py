@@ -6,13 +6,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from name_match_latest_spark.operators.multimodal import (
-    DETERMINISTIC_FAKE,
-    FEATURE_DIM,
-    auto_featurize,
-    decode_bmp,
-    encode_bmp,
-)
+from name_match_latest_spark.operators.multimodal import decode_bmp, encode_bmp
 
 dims = st.tuples(st.integers(1, 40), st.integers(1, 40))
 
@@ -24,25 +18,6 @@ def test_bmp_roundtrip_any_size(wh, seed):
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
     assert np.array_equal(decode_bmp(encode_bmp(img)), img)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.binary(max_size=256))
-def test_auto_featurize_total(payload):
-    """Never raises, always FEATURE_DIM floats in [0, 1] — arbitrary
-    (including malformed-magic) bytes fall back deterministically."""
-    f = auto_featurize(payload)
-    assert len(f) == FEATURE_DIM
-    assert all(0.0 <= x <= 1.0 for x in f)
-    assert f == auto_featurize(payload)  # deterministic
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.binary(min_size=2, max_size=64))
-def test_fallback_matches_fake_for_non_media(payload):
-    if payload[:2] == b"BM" or payload[:4] == b"RIFF":
-        return  # may decode for real
-    assert auto_featurize(payload) == DETERMINISTIC_FAKE(payload)
 
 
 @settings(max_examples=30, deadline=None)

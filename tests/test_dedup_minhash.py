@@ -113,15 +113,11 @@ def test_short_docs_do_not_crash_shingling(spark):
     ]
     docs = spark.createDataFrame(rows, SCHEMA)
 
-    # batch (explode+groupBy) path
+    # signature (explode+groupBy) path
     sigs = minhash_signatures_wide(docs, k=8).collect()
     ids = {r.doc_id for r in sigs}
     assert not ids & {"short0", "short1", "short2"}
     assert len(ids) == len(_corpus())
-
-    # stream-safe (per-row HOF) path
-    sigs_s = minhash_signatures_wide(docs, k=8, stream_safe=True).collect()
-    assert {r.doc_id for r in sigs_s} == ids
 
     # shingles_df directly
     sh = shingles_df(docs, n=3).filter("doc_id like 'short%'").count()
@@ -157,21 +153,9 @@ def test_max_bucket_auto_default(spark, monkeypatch):
     assert auto_capped < crowd_pairs
 
 
-def test_stream_safe_plan_equals_batch_plan(spark, docs):
-    """The per-row (streaming-legal) signature plan and the
-    explode+groupBy (batch) plan must produce identical values."""
-    from name_match_latest_spark.operators.dedup import minhash_signatures_wide
-
-    a = {r.doc_id: tuple(r[f"sig_{i}"] for i in range(8))
-         for r in minhash_signatures_wide(docs, k=8).collect()}
-    b = {r.doc_id: tuple(r[f"sig_{i}"] for i in range(8))
-         for r in minhash_signatures_wide(docs, k=8, stream_safe=True).collect()}
-    assert a == b
-
-
 def test_arrow_shingles_equal_column_plan_on_unicode_whitespace(spark):
     """shingles_df (Arrow-batched Python) and _shingle_array (Column
-    expressions, the streaming plan) must agree on adversarial inputs:
+    expressions, the reference) must agree on adversarial inputs:
     U+00A0 is NOT a separator (Java/RE2 \\s is ASCII-only — the Python
     side pins re.ASCII), tabs/newlines ARE, case folds, short docs
     empty."""
@@ -195,13 +179,13 @@ def test_arrow_shingles_equal_column_plan_on_unicode_whitespace(spark):
     batch = {
         (r.doc_id, r.tok) for r in shingles_df(docs, n=3).collect()
     }
-    stream = {
+    column = {
         (r.doc_id, r.tok)
         for r in docs.select(
             "doc_id", F.explode(_shingle_array(F.col("text"), 3)).alias("tok")
         ).collect()
     }
-    assert batch == stream
+    assert batch == column
     # the NBSP stayed inside one token => it bridges its neighbors
     assert ("u1", "alpha beta gamma delta") in batch
 

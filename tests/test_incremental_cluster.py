@@ -372,7 +372,7 @@ def test_fresh_lineage_labels_supersede(spark, tmp_path):
 def test_checkpoint_lineage_canonicalization(tmp_path, monkeypatch):
     """Same physical checkpoint dir under different spellings is ONE
     lineage (replays must stay deduped); different dirs differ."""
-    from name_match_latest_spark.streaming.stream_match import (
+    from name_match_latest_spark.streaming.incremental_cluster import (
         checkpoint_lineage,
     )
 
@@ -472,7 +472,7 @@ def test_checkpoint_lineage_legacy_sticky():
     deployments get the canonical id."""
     import hashlib
 
-    from name_match_latest_spark.streaming.stream_match import (
+    from name_match_latest_spark.streaming.incremental_cluster import (
         checkpoint_lineage,
     )
 

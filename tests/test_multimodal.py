@@ -1,16 +1,10 @@
-"""Multimodal plumbing: schemas, batching, magic sniffing, stub gating."""
+"""Multimodal metadata: magic-byte sniffing of binary payload columns."""
 
 from __future__ import annotations
 
 import pytest
 
-from name_match_latest_spark.operators.multimodal import (
-    DETERMINISTIC_FAKE,
-    FEATURE_DIM,
-    attach_media_metadata,
-    decode_and_featurize,
-    resize_images,
-)
+from name_match_latest_spark.operators.multimodal import attach_media_metadata
 
 
 @pytest.fixture()
@@ -39,26 +33,3 @@ def test_metadata_sniffing(spark, media):
     assert got[1][1] == 12
 
 
-def test_featurize_deterministic(spark, media):
-    out = decode_and_featurize(media.filter("payload is not null"))
-    rows = {r.media_id: r.features for r in out.collect()}
-    assert len(rows) == 4
-    for mid, feats in rows.items():
-        assert len(feats) == FEATURE_DIM
-        assert all(0.0 <= f <= 1.0 for f in feats)
-    # matches the pure-python fake byte-for-byte
-    assert rows[1] == pytest.approx(DETERMINISTIC_FAKE(b"\x89PNG\r\n\x1a\nxxxx"))
-
-
-def test_resize_stub_raises_at_execution(spark, media):
-    # formats with no stdlib kernel (BMP/PNG/GIF/JPEG all decode for
-    # real now): an unrecognized payload still raises the honest
-    # PIL/opencv message at execution time
-    df = resize_images(media.filter("media_id = 4"), 64, 64)
-    assert [f.name for f in df.schema.fields] == ["media_id", "resized", "width", "height"]
-    with pytest.raises(Exception, match="PIL|opencv"):
-        df.collect()
-    # a truncated JPEG header fails in the REAL codec with its own
-    # malformed-stream error, not the stub message
-    with pytest.raises(Exception, match="JPEG stream ended without a scan"):
-        resize_images(media.filter("media_id = 2"), 64, 64).collect()

@@ -1,5 +1,5 @@
-"""Real stdlib media kernels: BMP decode/resize, WAV PCM features,
-uncompressed-AVI frame sampling (no PIL/ffmpeg — struct + numpy)."""
+"""Real stdlib media kernels: BMP, PNG, GIF and JPEG codecs (no
+PIL/ffmpeg — struct/zlib + numpy), plus RIFF form-type sniffing."""
 
 from __future__ import annotations
 
@@ -10,20 +10,13 @@ import pytest
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from name_match_latest_spark.operators.multimodal import (
-    auto_featurize,
     decode_bmp,
-    decode_wav_pcm16,
     encode_bmp,
 )
 
 MEDIA_SCHEMA = StructType(
     [StructField("media_id", LongType(), False), StructField("payload", BinaryType(), True)]
 )
-
-
-def _bmp(w, h, seed=0):
-    rng = np.random.default_rng(seed)
-    return encode_bmp(rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8))
 
 
 def _wav(rate=8000, seconds=0.5, freq=440.0):
@@ -60,60 +53,6 @@ def _avi(n_frames=10, w=4, h=3, fps=5):
 def test_bmp_roundtrip():
     img = np.arange(5 * 7 * 3, dtype=np.uint8).reshape(5, 7, 3)
     assert np.array_equal(decode_bmp(encode_bmp(img)), img)
-
-
-def test_wav_roundtrip():
-    rate, channels, samples = decode_wav_pcm16(_wav(rate=8000, seconds=0.25))
-    assert (rate, channels, len(samples)) == (8000, 1, 2000)
-
-
-def test_auto_featurize_paths():
-    f_img = auto_featurize(_bmp(8, 6))
-    assert f_img[0] == 1.0 and f_img[1] == pytest.approx(8 / 65535)
-    f_wav = auto_featurize(_wav())
-    assert f_wav[0] == 0.5 and 0.4 < f_wav[2] < 0.47  # sine RMS = amp/sqrt(2) ~ 0.432
-    f_other = auto_featurize(b"\x89PNG....")
-    assert f_other[0] != 1.0  # md5 fallback
-
-
-def test_resize_bmp_distributed(spark):
-    from name_match_latest_spark.operators.multimodal import resize_images
-
-    df = spark.createDataFrame(
-        [(1, _bmp(16, 12, seed=1)), (2, _bmp(9, 5, seed=2))], MEDIA_SCHEMA
-    )
-    out = {r.media_id: r for r in resize_images(df, 4, 4).collect()}
-    for mid, row in out.items():
-        img = decode_bmp(bytes(row.resized))
-        assert img.shape == (4, 4, 3)
-    # nearest-neighbor is exact: check one pixel provenance
-    src = decode_bmp(_bmp(16, 12, seed=1))
-    got = decode_bmp(bytes(out[1].resized))
-    assert np.array_equal(got[0, 0], src[0, 0])
-
-
-def test_sample_video_frames_distributed(spark):
-    from name_match_latest_spark.operators.multimodal import sample_video_frames
-
-    df = spark.createDataFrame([(1, _avi(n_frames=10, fps=5))], MEDIA_SCHEMA)
-    # 10 frames at 5 fps = 2s of video; 1 frame/s -> every 5th frame -> 2
-    rows = sample_video_frames(df, every_n_seconds=1.0).collect()
-    frames = rows[0].frames
-    assert len(frames) == 2
-    img0 = decode_bmp(bytes(frames[0]))
-    assert img0.shape == (3, 4, 3)
-    assert img0[0, 0, 0] == 0  # frame 0 fill value
-    img1 = decode_bmp(bytes(frames[1]))
-    assert img1[0, 0, 0] == 100  # frame 5 fill value (5*20)
-
-
-def test_compressed_video_raises(spark):
-    from name_match_latest_spark.operators.multimodal import sample_video_frames
-
-    bad = _avi(n_frames=2).replace(b"00db", b"00dc")
-    df = spark.createDataFrame([(1, bad)], MEDIA_SCHEMA)
-    with pytest.raises(Exception, match="ffmpeg"):
-        sample_video_frames(df).collect()
 
 
 def test_avi_media_kind(spark):
@@ -303,35 +242,6 @@ def test_png_adam7_truncated_raises():
         decode_png(trunc)
 
 
-def test_png_featurize_and_resize_distributed(spark):
-    import numpy as np
-
-    from name_match_latest_spark.operators.multimodal import (
-        decode_and_featurize,
-        decode_png,
-        encode_png,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, (20, 16, 3), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_png(img)))], "media_id long, payload binary"
-    )
-    feats = decode_and_featurize(df).collect()[0].features
-    assert feats[0] == 1.0  # REAL image-stats path, not the md5 fake
-    assert feats[1] == pytest.approx(16 / 65535.0)
-    assert feats[2] == pytest.approx(20 / 65535.0)
-
-    out = resize_images(df, 8, 10).collect()[0]
-    assert (out.width, out.height) == (8, 10)
-    resized = decode_png(bytes(out.resized))
-    assert resized.shape == (10, 8, 3)
-    # nearest-neighbor: every resized pixel exists in the source
-    src = {tuple(p) for p in img.reshape(-1, 3)}
-    assert all(tuple(p) in src for p in resized.reshape(-1, 3))
-
-
 # --- GIF (stdlib LZW kernel, new r4) ----------------------------------------
 
 
@@ -397,36 +307,6 @@ def test_gif_interlaced_decode():
     assert (decode_gif(bytes(raw)) == img).all()
 
 
-def test_gif_featurize_and_resize_distributed(spark):
-    import numpy as np
-
-    from name_match_latest_spark.operators.multimodal import (
-        decode_gif,
-        decode_png,
-        decode_and_featurize,
-        encode_gif,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(21)
-    palette = rng.integers(0, 256, (30, 3), dtype=np.uint8)
-    img = palette[rng.integers(0, 30, (20, 16))]
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_gif(img)))], "media_id long, payload binary"
-    )
-    feats = decode_and_featurize(df).collect()[0].features
-    assert feats[0] == 1.0  # REAL image-stats path
-
-    out = resize_images(df, 8, 10).collect()[0]
-    resized = bytes(out.resized)
-    # nearest-neighbor of a GIF stays <=256 colors -> GIF out
-    assert resized[:4] == b"GIF8"
-    dec = decode_gif(resized)
-    assert dec.shape == (10, 8, 3)
-    src = {tuple(p) for p in img.reshape(-1, 3)}
-    assert all(tuple(p) in src for p in dec.reshape(-1, 3))
-
-
 def test_gif_png_roundtrip_properties():
     """Property fuzz: random palette sizes (incl. the 2-color floor
     and 256 ceiling), random dims, both codecs roundtrip exactly."""
@@ -488,44 +368,17 @@ def test_gif_lzw_stream_fuzz():
 
 def test_png_out_of_range_palette_index_clamped():
     """A corrupt palette PNG whose pixel index exceeds the PLTE must
-    clamp (like decode_gif), not IndexError past featurize's
-    fallback catch and kill the Spark task."""
-    from name_match_latest_spark.operators.multimodal import (
-        auto_featurize,
-        decode_png,
-    )
+    clamp (like decode_gif), not raise IndexError."""
+    from name_match_latest_spark.operators.multimodal import decode_png
 
     plte = bytes([255, 0, 0, 0, 255, 0])  # 2 entries
     bad = _handmade_png(3, 2, 1, b"\x00\x00\x07", plte=plte)  # index 7
     img = decode_png(bad)
+    assert img.shape == (1, 2, 3)
     assert tuple(img[0, 1]) == (0, 255, 0)  # clamped to last entry
-    feats = auto_featurize(bad)
-    assert len(feats) == 16  # decodes via the real image path, no crash
 
 
 # --- baseline JPEG (operators/jpeg.py, round 5) -------------------------------
-
-
-def _mjpeg_avi(n_frames=6, w=8, h=8, fps=3):
-    """RIFF/AVI whose video chunks are MJPEG '00dc' frames (each a
-    standalone baseline JPEG)."""
-    from name_match_latest_spark.operators.jpeg import encode_jpeg
-
-    frames = []
-    for i in range(n_frames):
-        img = np.full((h, w, 3), (i * 30) % 256, dtype=np.uint8)
-        frames.append(encode_jpeg(img))
-
-    def chunk(fourcc, payload):
-        out = fourcc + struct.pack("<I", len(payload)) + payload
-        return out + (b"\x00" if len(payload) % 2 else b"")
-
-    avih = chunk(b"avih", struct.pack("<I", int(1e6 / fps)) + b"\x00" * 52)
-    strf_hdr = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, 0, 0, 0, 0, 0)
-    strf = chunk(b"strf", strf_hdr)
-    hdrl = chunk(b"LIST", b"hdrl" + avih + strf)
-    movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", f) for f in frames))
-    return b"RIFF" + struct.pack("<I", 4 + len(hdrl) + len(movi)) + b"AVI " + hdrl + movi
 
 
 class TestJpegCodec:
@@ -607,6 +460,14 @@ class TestJpegCodec:
             assert prog.count(b"\xff\xda") == 14  # the full scan script
             assert np.array_equal(decode_jpeg(prog), decode_jpeg(base))
 
+    def test_truncated_stream_raises_codec_error(self):
+        from name_match_latest_spark.operators.jpeg import decode_jpeg
+
+        # a JPEG magic + APP0 stub with no frame or scan fails in the
+        # real codec with its own malformed-stream error
+        with pytest.raises(ValueError, match="JPEG stream ended without a scan"):
+            decode_jpeg(b"\xff\xd8\xff\xe0JFIF")
+
     def test_arithmetic_coded_raises_honestly(self):
         from name_match_latest_spark.operators.jpeg import (
             decode_jpeg,
@@ -619,41 +480,3 @@ class TestJpegCodec:
         with pytest.raises(NotImplementedError, match="arithmetic"):
             decode_jpeg(bytes(enc))
 
-    def test_resize_jpeg_distributed(self, spark):
-        from name_match_latest_spark.operators.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-        from name_match_latest_spark.operators.multimodal import resize_images
-
-        rng = np.random.default_rng(11)
-        img = rng.integers(0, 256, (12, 16, 3), dtype=np.uint8)
-        df = spark.createDataFrame([(1, encode_jpeg(img))], MEDIA_SCHEMA)
-        row = resize_images(df, 8, 6).collect()[0]
-        out = bytes(row.resized)
-        assert out[:3] == b"\xff\xd8\xff"  # re-encoded in its own format
-        assert decode_jpeg(out).shape == (6, 8, 3)
-
-    def test_auto_featurize_jpeg_is_image_path(self):
-        from name_match_latest_spark.operators.jpeg import encode_jpeg
-
-        img = np.full((16, 16, 3), 200, dtype=np.uint8)
-        feats = auto_featurize(encode_jpeg(img))
-        assert feats[0] == 1.0  # image-stats path, not md5 fallback
-        assert abs(feats[3] - 200 / 255.0) < 0.02  # channel mean
-
-
-def test_mjpeg_avi_frames_sampled(spark):
-    from name_match_latest_spark.operators.multimodal import (
-        sample_video_frames,
-    )
-
-    df = spark.createDataFrame([(1, _mjpeg_avi(n_frames=6, fps=3))], MEDIA_SCHEMA)
-    rows = sample_video_frames(df, every_n_seconds=1.0).collect()
-    frames = rows[0].frames
-    assert len(frames) == 2  # 6 frames at 3 fps, 1/s -> every 3rd
-    img0 = decode_bmp(bytes(frames[0]))  # uniform BMP re-wrap
-    assert img0.shape == (8, 8, 3)
-    assert abs(int(img0[0, 0, 0]) - 0) <= 3  # frame 0 fill 0
-    img1 = decode_bmp(bytes(frames[1]))
-    assert abs(int(img1[0, 0, 0]) - 90) <= 3  # frame 3 fill 90
