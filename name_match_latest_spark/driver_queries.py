@@ -422,27 +422,14 @@ WHERE a_bd = b_bd
 )
 def _algo3_prefilter(spark, sf_dir):
     from .functions.udfs import jaro_winkler_udf
-    from .operators.algos import _require, match_fuzzy  # noqa: F401
-    from .operators.blocking import (
-        algo3_block_key,
-        algo3_fallback1_key,
-        algo3_fallback2_key,
-        pair_join,
-    )
+    from .operators.algos import _algo3_candidates, _require
     from .operators.dates import bd_match_cond
     from .operators.scoring import sim_lev_pct_col
 
     t1, t2 = load_persons(spark, sf_dir)
     t1 = _require(t1, "first_n", "last_n", "birthdate")
     t2 = _require(t2, "first_n", "last_n", "birthdate")
-    t2_keys = t2.select(algo3_block_key().alias("_tk")).distinct()
-
-    tier1 = pair_join(t1, t2, lambda p: [algo3_block_key(p)])
-    miss1 = t1.join(t2_keys, on=[algo3_block_key() == F.col("_tk")], how="left_anti")
-    tier2 = pair_join(miss1, t2, lambda p: [algo3_fallback1_key(p)], lambda p: [algo3_block_key(p)])
-    miss2 = miss1.join(t2_keys, on=[algo3_fallback1_key() == F.col("_tk")], how="left_anti")
-    tier3 = pair_join(miss2, t2, lambda p: [algo3_fallback2_key(p)], lambda p: [algo3_block_key(p)])
-    cand = tier1.unionByName(tier2).unionByName(tier3)
+    cand = _algo3_candidates(t1, t2)
     cand = cand.filter(bd_match_cond(F.col("t1_birthdate"), F.col("t2_birthdate"), False))
     lev = sim_lev_pct_col(F.col("t1_simple_full"), F.col("t2_simple_full"))
     jw = jaro_winkler_udf(F.col("t1_simple_full"), F.col("t2_simple_full")) * 100.0

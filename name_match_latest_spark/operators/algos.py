@@ -147,6 +147,33 @@ def match_algo2(
     )
 
 
+def _algo3_candidates(t1: DataFrame, t2: DataFrame) -> DataFrame:
+    """Algo 3's three candidate tiers, unioned: the primary block, then
+    fallback 1 for probe rows whose primary block is empty, then
+    fallback 2 for rows whose fallback-1 block is empty too.  Every
+    tier probes t2's PRIMARY key.  Shared by ``match_fuzzy`` and the
+    ``algo3_prefilter`` driver query."""
+    t2_keys = t2.select(algo3_block_key().alias("_tk")).distinct()
+
+    def primary(p):
+        return [algo3_block_key(p)]
+
+    tier1 = pair_join(t1, t2, primary, primary)
+
+    # probe rows whose PRIMARY block is empty
+    t1_miss1 = t1.join(
+        t2_keys, on=[algo3_block_key() == F.col("_tk")], how="left_anti"
+    )
+    tier2 = pair_join(t1_miss1, t2, lambda p: [algo3_fallback1_key(p)], primary)
+
+    t1_miss2 = t1_miss1.join(
+        t2_keys, on=[algo3_fallback1_key() == F.col("_tk")], how="left_anti"
+    )
+    tier3 = pair_join(t1_miss2, t2, lambda p: [algo3_fallback2_key(p)], primary)
+
+    return tier1.unionByName(tier2).unionByName(tier3)
+
+
 def match_fuzzy(t1: DataFrame, t2: DataFrame, allow_swap: bool = False) -> DataFrame:
     """Algo 3 (Fuzzy, with middle): the canonical blocked CPU route
     ``match_fuzzy_cpu_gpu_equivalent`` (mod.rs:2747-2903).
@@ -170,31 +197,12 @@ def match_fuzzy(t1: DataFrame, t2: DataFrame, allow_swap: bool = False) -> DataF
     # this algorithm never reads BEFORE it (normalize_text x3 and the
     # no-middle metaphone never evaluate at all — only dmeta_full of
     # the five per-person Python UDFs survives; guide §2.3/§4.1).
-    from ..plans.caching import tracked_persist
+    from ..plans.caching import tracked_cache
 
     drop = ["first_n", "middle_n", "last_n", "simple_full_no_mid", "dmeta_no_mid"]
-    t1, t2 = tracked_persist(t1.drop(*drop)), tracked_persist(t2.drop(*drop))
+    t1, t2 = tracked_cache(t1.drop(*drop)), tracked_cache(t2.drop(*drop))
 
-    t2_keys = t2.select(algo3_block_key().alias("_tk")).distinct()
-
-    def primary(p):
-        return [algo3_block_key(p)]
-
-    tier1 = pair_join(t1, t2, primary, primary)
-
-    # probe rows whose PRIMARY block is empty
-    t1_miss1 = t1.join(
-        t2_keys, on=[algo3_block_key() == F.col("_tk")], how="left_anti"
-    )
-    tier2 = pair_join(t1_miss1, t2, lambda p: [algo3_fallback1_key(p)], primary)
-
-    t1_miss2 = t1_miss1.join(
-        t2_keys, on=[algo3_fallback1_key() == F.col("_tk")], how="left_anti"
-    )
-    tier3 = pair_join(t1_miss2, t2, lambda p: [algo3_fallback2_key(p)], primary)
-
-    cand = tier1.unionByName(tier2).unionByName(tier3)
-    cand = cand.filter(
+    cand = _algo3_candidates(t1, t2).filter(
         bd_match_cond(F.col("t1_birthdate"), F.col("t2_birthdate"), allow_swap)
     )
     scored = score_pairs(cand, no_middle=False)
@@ -265,7 +273,7 @@ def match_lev_weighted(t1: DataFrame, t2: DataFrame) -> DataFrame:
     Emits ALL deduped candidates with per-field Levenshtein mean
     confidence and matched-field flags; thresholding happens at export
     (csv_export.rs:151-154)."""
-    from ..plans.caching import tracked_persist
+    from ..plans.caching import tracked_cache
 
     # Algo 7's keys and scoring are all JVM expressions over bd_str and
     # simple_* — persisting the full prepared frame would materialize
@@ -277,8 +285,8 @@ def match_lev_weighted(t1: DataFrame, t2: DataFrame) -> DataFrame:
         "simple_full_no_mid", "dmeta_full", "dmeta_no_mid",
         "first_init", "last_init", "sx_last_n", "birth_year",
     ]
-    t1 = tracked_persist(_require(t1, "birthdate").drop(*drop))
-    t2 = tracked_persist(_require(t2, "birthdate").drop(*drop))
+    t1 = tracked_cache(_require(t1, "birthdate").drop(*drop))
+    t2 = tracked_cache(_require(t2, "birthdate").drop(*drop))
 
     def sx_keys(p):
         return [

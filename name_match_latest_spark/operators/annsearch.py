@@ -704,7 +704,7 @@ def semantic_dedup(
     # times.  localCheckpoint, not persist: checkpoint blocks are
     # released by the ContextCleaner when the frame is garbage-
     # collected, so library callers don't leak pinned storage per
-    # call (the dedup.py:440 discipline — a tracked_persist here had
+    # call (the dedup.py band-table discipline — a tracked_cache here had
     # no release point inside the operator)
     lists = ivf_assignments(
         embeddings, cents, 1, id_col, vec_col

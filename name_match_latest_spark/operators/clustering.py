@@ -208,7 +208,6 @@ def merge_components(
     new_nodes: DataFrame | None = None,
     src: str = "src",
     dst: str = "dst",
-    changes_only: bool = False,
 ) -> DataFrame:
     """Incrementally fold new match edges into an existing
     ``(node, component)`` assignment — the continuous-crawl operator:
@@ -235,11 +234,6 @@ def merge_components(
     edge endpoints, and ``new_nodes``.  Component ids remain minimum
     node ids, so repeated incremental updates agree exactly with one
     batch recompute over the union of all edges.
-
-    ``changes_only=True`` returns ONLY the rows whose assignment
-    changed or is new — the merge-on-read DELTA a label store appends
-    per micro-batch (O(changes) written, not O(corpus); see
-    streaming/incremental_cluster.py).
     """
     e = new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     lab = labels.select("node", "component")
@@ -271,20 +265,14 @@ def merge_components(
         F.col("node").alias("_old"), F.col("component").alias("_new")
     )
 
-    # 3a. existing nodes: relabel through the broadcast remap —
-    # changes_only takes the inner join (rows in merged components
-    # only); the full view keeps every row via left join + coalesce
-    if changes_only:
-        updated_old = lab.join(
-            F.broadcast(remap), lab.component == F.col("_old"), "inner"
-        ).select("node", F.col("_new").alias("component"))
-    else:
-        updated_old = lab.join(
-            F.broadcast(remap), lab.component == F.col("_old"), "left"
-        ).select(
-            "node",
-            F.coalesce(F.col("_new"), F.col("component")).alias("component"),
-        )
+    # 3a. existing nodes: relabel through the broadcast remap, keeping
+    # every row via left join + coalesce
+    updated_old = lab.join(
+        F.broadcast(remap), lab.component == F.col("_old"), "left"
+    ).select(
+        "node",
+        F.coalesce(F.col("_new"), F.col("component")).alias("component"),
+    )
 
     # 3b. nodes introduced by this increment: edge endpoints + declared
     # isolated nodes, minus already-labeled ones; their condensed label

@@ -413,7 +413,7 @@ def minhash_lsh_candidates(
     # localCheckpoint, not persist: checkpoint blocks are released by
     # the ContextCleaner when the frame is garbage-collected, so
     # library callers don't leak pinned storage per call (a
-    # tracked_persist here had no release point inside the operator)
+    # tracked_cache here had no release point inside the operator)
     band = minhash_bands(docs, k, bands, shingle).localCheckpoint(eager=False)
     if max_bucket is not None:
         oversized = (

@@ -77,7 +77,6 @@ def household_aggregate(
     t2: DataFrame,
     min_conf: float,
     option: int = 5,
-    with_row_id: bool = True,
 ) -> DataFrame:
     """Aggregate person-level pairs into HouseholdAggRow rows.
 
@@ -148,20 +147,12 @@ def household_aggregate(
     out = agg.withColumn(
         "hh_id", F.coalesce(F.col("hh_key").try_cast("bigint"), F.lit(0))
     )
-    if not with_row_id:
-        # the scale mode: at web scale the parity row_id below is a
-        # single-partition global sort — skip it when the consumer
-        # doesn't need reference-identical row numbering
-        return out.select("uuid", "hh_id", "match_percentage").orderBy(
-            "uuid", "hh_id"
-        )
 
-    # PARITY MODE ONLY: row_id follows the reference's BTreeMap
-    # iteration order: (uuid, hh) for opt5 (mod.rs:787-798), (hh, uuid)
-    # for opt6 (:1057-1068).  A global Window.orderBy is a one-partition
-    # sort — acceptable because it runs AFTER the >50% filter (output is
-    # household-level, ~|uuid| rows, already reduced by two shuffles);
-    # for web-scale outputs use with_row_id=False.
+    # row_id follows the reference's BTreeMap iteration order: (uuid,
+    # hh) for opt5 (mod.rs:787-798), (hh, uuid) for opt6 (:1057-1068).
+    # A global Window.orderBy is a one-partition sort — acceptable
+    # because it runs AFTER the >50% filter (output is household-level,
+    # ~|uuid| rows, already reduced by two shuffles).
     order_w = (
         Window.orderBy("uuid", "hh_key") if option == 5 else Window.orderBy("hh_key", "uuid")
     )

@@ -1,29 +1,27 @@
-"""Persist bookkeeping (round-1 finding: cache leaks).
+"""Cache bookkeeping (round-1 finding: cache leaks).
 
-Some operators ``persist()`` DataFrames whose lifetime extends past
+Some operators ``cache()`` DataFrames whose lifetime extends past
 their function return — the blocked fuzzy matchers cache the
 per-person UDF materialization that three join tiers share
 (algos.py), and ``run_cascade`` caches each level's matches because
 exclusion depends on them.  The caller, not the operator, knows when
 the results have been consumed, so the operators register every such
-frame here and long-running sessions call :func:`unpersist_tracked`
-between queries (the driver-query registry does this automatically —
-each query clears the previous query's caches on entry).
+frame here (:func:`tracked_cache`) and long-running sessions call
+:func:`unpersist_tracked` between queries (the driver-query registry
+does this automatically — each query clears the previous query's
+caches on entry).
+
+``cache()`` is ``persist()`` at its default storage level
+(``MEMORY_AND_DISK_DESER``), so this one helper covers both.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["tracked_persist", "tracked_cache", "unpersist_tracked"]
+__all__ = ["tracked_cache", "unpersist_tracked"]
 
 _TRACKED: list[DataFrame] = []
-
-
-def tracked_persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _TRACKED.append(out)
-    return out
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:

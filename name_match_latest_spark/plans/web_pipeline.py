@@ -81,9 +81,9 @@ def cluster_pages(pages: DataFrame) -> DataFrame:
     sides), the node set, and the final assignment join; without the
     persist the whole extract+normalize lineage re-executes per use.
     """
-    from .caching import tracked_persist
+    from .caching import tracked_cache
 
-    prepared = tracked_persist(prepare_mentions(pages).select(*MATCH_COLS))
+    prepared = tracked_cache(prepare_mentions(pages).select(*MATCH_COLS))
     edges = match_mentions(prepared).select(
         F.col("t1_id").alias("src"), F.col("t2_id").alias("dst")
     )
@@ -103,13 +103,12 @@ def run_resumable(
     pages: DataFrame,
     out_dir: str,
     n_groups: int = 8,
-    config_sig_extra: str = "",
     fail_after_group: int | None = None,
 ) -> dict:
     """Checkpointed execution: per blocking-key group, write edges and
     commit lineage.  Returns run metrics.  ``fail_after_group`` is the
     kill-switch used by the resume test."""
-    sig = hashlib.md5(f"web-pipeline-v1|{n_groups}|{config_sig_extra}".encode()).hexdigest()
+    sig = hashlib.md5(f"web-pipeline-v1|{n_groups}|".encode()).hexdigest()
     audit = AuditLog(os.path.join(out_dir, "audit"), sig)
     done = audit.committed_groups()
 

@@ -7,11 +7,10 @@ Column-expression function of (id, seed), so any scale generates in
 parallel with no Python in the row path and regenerates identically at
 any parallelism (same property as sources/web.generate_webpages).
 
-Used by the person-match scaling benchmark
-(scripts/bench_scaling_persons.py): the reference hard-blocks fuzzy
-matching at >= 1M rows per side (run_service/scale.rs:8-10), so
-demonstrating Algo-3 at 5M x 5M and measuring N -> 4N scaling is the
-headline capability claim.
+Used by the person-match scaling job (``scripts/bench_scaling.py
+persons``): the reference hard-blocks fuzzy matching at >= 1M rows per
+side (run_service/scale.rs:8-10), so demonstrating Algo-3 at 5M x 5M
+and measuring N -> 4N scaling is the headline capability claim.
 
 Name shape: three syllables from a 24-syllable pool (13,824 distinct
 names per field) — large enough that (birth_year, initials,

@@ -581,11 +581,11 @@ class IncrementalClusterer:
     def _merge_log_delta(
         self, new_edges: DataFrame, new_nodes: DataFrame
     ) -> DataFrame:
-        """(node, component) rows that change or are new — the
-        log-aware equivalent of ``merge_components(...,
-        changes_only=True)`` with per-batch cost O(batch + touched),
-        independent of corpus size (asserted value-equal to batch
-        re-clustering by tests/test_incremental_cluster.py)."""
+        """(node, component) rows that change or are new — the delta
+        of ``merge_components`` computed against the label log, with
+        per-batch cost O(batch + touched), independent of corpus size
+        (asserted value-equal to batch re-clustering by
+        tests/test_incremental_cluster.py)."""
         spark = self.spark
         try:
             log = self.labels.read(spark)
