@@ -14,6 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.caching import tracked_cache
 from .blocking import pair_join
 from .dates import bd_key_array_col, bd_match_cond
 from .scoring import score_pairs
@@ -222,12 +223,22 @@ def run_cascade(
     exclusive mode, ids matched at level k are removed from BOTH sides
     for levels > k via left-anti joins (cascade.rs:797-809).
 
-    Each level's matches DataFrame is materialized (count) before the
-    next level runs, since exclusion depends on it; the anti-join
-    builds are id-only projections and broadcast-sized in practice.
+    Both prepared sides are cached once at entry (the reference's
+    per-person fuzzy cache, mod.rs:418-463), so every level's join and
+    every exclusion anti-join reads the cached relation and the
+    per-person preparation UDFs run once per row for the whole
+    cascade, in both modes.  Each level's matches DataFrame is cached
+    and materialized (count) before the next level runs, since
+    exclusion depends on it; the anti-join builds are id-only
+    projections and broadcast-sized in practice.
+
+    Levels come back unsorted: ordering is the sinks' job (the CLI
+    writers and ``write_matches_csv`` sort by ``(t1_id, t2_id)``).
+    All caches are registered with :func:`tracked_cache`; release them
+    with ``unpersist_tracked`` once the results are consumed.
     """
     cfg = cfg or CascadeConfig()
-    rem1, rem2 = t1, t2
+    rem1, rem2 = tracked_cache(t1), tracked_cache(t2)
     out: list[LevelResult] = []
     for level in cfg.levels:
         m = match_level(
@@ -238,9 +249,7 @@ def run_cascade(
             allow_swap=cfg.allow_birthdate_swap,
             max_block=cfg.max_fuzzy_block,
         )
-        from ..plans.caching import tracked_cache
-
-        m = tracked_cache(m.orderBy("t1_id", "t2_id"))
+        m = tracked_cache(m)
         count = m.count()
         out.append(LevelResult(level, m, count))
         if cfg.exclusive and count > 0:

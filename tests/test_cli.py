@@ -35,11 +35,16 @@ def tables(spark, tmp_path_factory):
     return dump(p1, "t1"), dump(p2, "t2"), str(root)
 
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _run_cli(args):
-    env = dict(os.environ, SPARK_GRAFT_MASTER="local[4]")
+    # a small driver heap: the default preallocates 8g beside the test
+    # session's own JVM, and the tables are 40 rows
+    env = dict(os.environ, SPARK_GRAFT_MASTER="local[4]", SPARK_GRAFT_DRIVER_MEM="1g")
     res = subprocess.run(
         [sys.executable, "-m", "name_match_latest_spark", *args],
-        capture_output=True, text=True, cwd="/root/repo", env=env, timeout=300,
+        capture_output=True, text=True, cwd=REPO_ROOT, env=env, timeout=300,
     )
     return res
 
@@ -106,7 +111,10 @@ def test_cli_printed_count_equals_written_rows(tables):
 def test_cli_cascade_default_levels(spark, tables):
     """The cascade at its default levels (1,2,3,10,11) unions exact
     and fuzzy levels whose column sets differ; every printed level's
-    matches land in the written output."""
+    matches land in the written output, sorted by (t1_id, t2_id) at
+    the sink (run_cascade returns its levels unsorted)."""
+    import pyarrow.parquet as pq
+
     t1, t2, root = tables
     out = os.path.join(root, "out_cascade")
     res = _run_cli([t1, t2, "cascade", out, "--format", "parquet"])
@@ -120,6 +128,12 @@ def test_cli_cascade_default_levels(spark, tables):
     written = spark.read.parquet(out).count()
     assert written == sum(per_level) > 0
     assert int(res.stdout.split("matches=")[1].split()[0]) == written
+    keys = []
+    for part in sorted(glob.glob(os.path.join(out, "part-*.parquet"))):
+        cols = pq.read_table(part, columns=["t1_id", "t2_id"]).to_pydict()
+        keys.extend(zip(cols["t1_id"], cols["t2_id"]))
+    assert len(keys) == written
+    assert all(a <= b for a, b in zip(keys, keys[1:]))
 
 
 def test_cli_jdbc_arg_requires_table_param(tables):

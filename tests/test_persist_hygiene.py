@@ -50,12 +50,14 @@ def test_run_cascade_releases_caches(spark):
 
     p1, p2 = generate_persons(80, seed=9)
     t1, t2 = persons_df(spark, p1), persons_df(spark, p2)
-    results = run_cascade(t1, t2, CascadeConfig(levels=[1, 2, 3], threshold=0.9))
+    levels = [1, 2, 3]
+    results = run_cascade(t1, t2, CascadeConfig(levels=levels, threshold=0.9))
     total = sum(r.match_count for r in results)
     assert total >= 0
 
-    unpersist_tracked(blocking=True)
-    assert _persistent_ids(spark) <= baseline
+    # the two prepared sides plus one cache per level
+    assert unpersist_tracked(blocking=True) == len(levels) + 2
+    assert _persistent_ids(spark) == baseline
 
 
 def test_driver_query_wrapper_clears_previous(spark):
