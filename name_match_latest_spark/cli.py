@@ -6,7 +6,8 @@ Reference (`src/main.rs:205-265`):
                  <table1> <table2> <algo:1|2|3|4|5|6> <out_path>
                  [format] [--direct-fuzzy-normalization] [gpu flags...]
 
-Spark twin: tables are paths (parquet dir / .csv file) or JDBC URLs;
+Spark twin: tables are paths (parquet dir / .csv / .xlsx file) or
+JDBC URLs, dispatched on the prefix or (case-insensitive) extension;
 GPU flags are meaningless (Catalyst/Tungsten owns the physical layer)
 and are accepted-and-ignored with a note, so reference invocations
 keep working.  Algo numbering matches the reference: 1/2 exact,
@@ -38,11 +39,15 @@ _IGNORED_GPU_FLAGS = {
 def _load_table(spark, path: str):
     from .operators.persons import apply_column_mapping, prepare_persons
     from .sources.csv_source import load_persons_csv
+    from .sources.excel_source import load_persons_xlsx
 
+    lower = path.lower()
     if path.startswith("jdbc:"):
         df = _load_jdbc(spark, path)
-    elif path.endswith(".csv"):
+    elif lower.endswith(".csv"):
         df = load_persons_csv(spark, path)
+    elif lower.endswith(".xlsx"):
+        df = load_persons_xlsx(spark, path)
     else:
         df = spark.read.parquet(path)
     # missing optional person columns (hh_id, geo codes) become NULLs
@@ -97,11 +102,13 @@ def run(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="name_match_latest_spark")
     p.add_argument(
         "table1",
-        help="parquet dir, .csv file, or jdbc:...?table=T&user=U&password=P (match source)",
+        help="parquet dir, .csv or .xlsx file, or "
+        "jdbc:...?table=T&user=U&password=P (match source)",
     )
     p.add_argument(
         "table2",
-        help="parquet dir, .csv file, or jdbc:...?table=T&user=U&password=P (match target)",
+        help="parquet dir, .csv or .xlsx file, or "
+        "jdbc:...?table=T&user=U&password=P (match target)",
     )
     p.add_argument("algo", help="1|2|3|4|5|6|7|cascade")
     p.add_argument("out_path")

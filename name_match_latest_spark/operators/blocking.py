@@ -102,23 +102,6 @@ def algo3_fallback2_key(p: str = "") -> Column:
     )
 
 
-def repartition_last_initial(df: DataFrame, last_col: str = "last_n") -> DataFrame:
-    """The reference's LastInitial partitioner: 27 buckets A-Z + other
-    (util/partition.rs:16-39).  Kept for parity/diagnostics; hash
-    repartition on the real block key is normally better."""
-    bucket = F.upper(F.substring(F.col(last_col), 1, 1))
-    bucket = F.when(bucket.rlike("^[A-Z]$"), bucket).otherwise(F.lit("#"))
-    return df.repartition(27, bucket)
-
-
-def repartition_birth_year_ranges(
-    df: DataFrame, years_per_shard: int = 5, bd_col: str = "birthdate"
-) -> DataFrame:
-    """BirthYearRanges partitioner: N-year shards (util/partition.rs:41-75)."""
-    shard = F.floor(F.year(F.col(bd_col)) / years_per_shard)
-    return df.repartition(shard)
-
-
 def block_histogram(df: DataFrame, key: Column) -> DataFrame:
     """groupBy(block_key).count() — the reference's candidate-pair
     estimator (mod.rs:1863-1902); we reuse it for salt-factor and

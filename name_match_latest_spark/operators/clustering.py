@@ -171,13 +171,13 @@ def connected_components(
     # Shuffle width inside the loop is the SESSION's (plus AQE
     # coalescing of small post-shuffle partitions).  An earlier
     # version right-sized it by mutating spark.sql.shuffle.partitions
-    # for the loop's duration — but SQLConf is session-global and
-    # plans/jobs.py explicitly supports CONCURRENT job groups in one
-    # session: a query on another thread would silently execute at
-    # the CC loop's width.  Below driver_threshold the union-find
-    # path already avoids the many-small-jobs overhead that mutation
-    # targeted; above it (the 100 TB regime) the session width is the
-    # right width, and AQE handles the shrinking tail rounds.
+    # for the loop's duration — but SQLConf is session-global and any
+    # session can run CONCURRENT queries: a query on another thread
+    # would silently execute at the CC loop's width.  Below
+    # driver_threshold the union-find path already avoids the
+    # many-small-jobs overhead that mutation targeted; above it (the
+    # 100 TB regime) the session width is the right width, and AQE
+    # handles the shrinking tail rounds.
 
     # one action per round: lazy localCheckpoint truncates the logical
     # plan every round (nested star-join plans otherwise grow

@@ -72,7 +72,12 @@ def read_xlsx_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
             for r in rels
             if r.get("Id") == rid
         )
-        sheet_path = "xl/" + target.lstrip("/") if not target.startswith("xl/") else target
+        # targets are relative to xl/ or, as some writers emit them,
+        # absolute from the package root ("/xl/worksheets/sheet1.xml")
+        if target.startswith(("/", "xl/")):
+            sheet_path = target.lstrip("/")
+        else:
+            sheet_path = "xl/" + target
         sheet = ET.fromstring(z.read(sheet_path))
 
     raw_rows: list[dict[int, str]] = []
@@ -99,23 +104,23 @@ def read_xlsx_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
         return [], []
     width = max((max(r) + 1 for r in raw_rows if r), default=0)
     headers = [raw_rows[0].get(i) or f"col_{i}" for i in range(width)]
-    rows = [[r.get(i) for i in range(width)] for r in raw_rows[1:]]
+    # a <row> with no valued cell (formatted but empty) is not a record
+    rows = [[r.get(i) for i in range(width)] for r in raw_rows[1:] if r]
     return headers, rows
 
 
 def load_persons_xlsx(spark: SparkSession, path: str) -> DataFrame:
     """xlsx -> person DataFrame: header-hint mapping (shared with the
     CSV loader), strict dates accepting EITHER yyyy-MM-dd strings or
-    Excel date serials."""
+    Excel date serials; the geo codes the L4-L9 cascade keys need are
+    read from the same-named headers."""
     headers, rows = read_xlsx_rows(path)
     m = infer_mapping(headers)
     hidx = {h: i for i, h in enumerate(headers)}
 
     def get(row, key):
-        col = m.get(key)
-        if col is None:
-            return None
-        v = row[hidx[col]]
+        i = hidx.get(m.get(key, key))
+        v = row[i] if i is not None else None
         return v if v != "" else None
 
     out_rows = []
@@ -146,8 +151,8 @@ def load_persons_xlsx(spark: SparkSession, path: str) -> DataFrame:
                 get(row, "last_name"),
                 bd,
                 get(row, "hh_id"),
-                None,
-                None,
+                get(row, "barangay_code"),
+                get(row, "city_code"),
             )
         )
     from ..operators.persons import PERSON_SCHEMA

@@ -1,6 +1,6 @@
 """CLI entry point (`python -m name_match_latest_spark`): the
 reference's `name_matcher <t1> <t2> <algo> <out>` surface over
-parquet/CSV tables, with GPU flags accepted-and-ignored."""
+parquet/CSV/XLSX tables, with GPU flags accepted-and-ignored."""
 
 from __future__ import annotations
 
@@ -134,6 +134,88 @@ def test_cli_cascade_default_levels(spark, tables):
         keys.extend(zip(cols["t1_id"], cols["t2_id"]))
     assert len(keys) == written
     assert all(a <= b for a, b in zip(keys, keys[1:]))
+
+
+def _pair_set(out_dir):
+    return {(r["t1_id"], r["t2_id"]) for r in _read_csv_rows(out_dir)}
+
+
+def test_cli_xlsx_input(spark, tables):
+    """.xlsx table args go through the Excel loader, not the parquet
+    reader, and match exactly like the same tables given as parquet."""
+    from name_match_latest_spark.sources.xlsx import write_xlsx
+
+    t1, t2, root = tables
+    books = []
+    for src, name in ((t1, "t1.xlsx"), (t2, "t2.XLSX")):
+        df = spark.read.parquet(src).orderBy("id")
+        path = os.path.join(root, name)
+        # write_xlsx stores dates as ISO strings, which the loader parses
+        write_xlsx(path, {"persons": (df.columns, [tuple(r) for r in df.collect()])})
+        books.append(path)
+
+    out_pq, out_x = os.path.join(root, "out_pq"), os.path.join(root, "out_xlsx_in")
+    res = _run_cli([t1, t2, "1", out_pq, "--threshold", "0.0"])
+    assert res.returncode == 0, res.stderr[-2000:]
+    res = _run_cli([*books, "1", out_x, "--threshold", "0.0"])
+    assert res.returncode == 0, res.stderr[-2000:]
+    want = _pair_set(out_pq)
+    assert want and _pair_set(out_x) == want
+
+
+@pytest.mark.parametrize(
+    "path, loader",
+    [("in/DATA.CSV", "csv_source.load_persons_csv"),
+     ("in/People.Xlsx", "excel_source.load_persons_xlsx")],
+)
+def test_cli_input_extension_is_case_insensitive(monkeypatch, path, loader):
+    """Upper-case extensions reach their loader, not the parquet
+    reader (the loader is replaced by a stub that raises, so nothing
+    is read)."""
+    import name_match_latest_spark.cli as cli
+
+    class Routed(Exception):
+        pass
+
+    def fake(spark, p):
+        raise Routed(p)
+
+    monkeypatch.setattr(f"name_match_latest_spark.sources.{loader}", fake)
+    with pytest.raises(Routed):
+        cli._load_table(None, path)
+
+
+@pytest.mark.parametrize(
+    "path, route",
+    [("in/people.csv", "csv"),
+     ("in/people.xlsx", "xlsx"),
+     ("in/people", "parquet"),
+     ("in/people.xls", "parquet"),  # legacy binary workbooks are not read
+     ("in/people.csv.d", "parquet"),
+     ("jdbc:postgresql://h/db?table=people.csv", "jdbc")],  # prefix first
+)
+def test_cli_load_table_dispatch(monkeypatch, path, route):
+    """Each table arg reaches exactly one reader: jdbc: by prefix, then
+    .csv/.xlsx by extension, else the parquet reader."""
+    import types
+
+    import name_match_latest_spark.cli as cli
+
+    class Routed(Exception):
+        pass
+
+    def stub(name):
+        def fake(*args):
+            raise Routed(name, args[-1])
+        return fake
+
+    monkeypatch.setattr("name_match_latest_spark.sources.csv_source.load_persons_csv", stub("csv"))
+    monkeypatch.setattr("name_match_latest_spark.sources.excel_source.load_persons_xlsx", stub("xlsx"))
+    monkeypatch.setattr(cli, "_load_jdbc", stub("jdbc"))
+    spark = types.SimpleNamespace(read=types.SimpleNamespace(parquet=stub("parquet")))
+    with pytest.raises(Routed) as got:
+        cli._load_table(spark, path)
+    assert got.value.args == (route, path)
 
 
 def test_cli_jdbc_arg_requires_table_param(tables):

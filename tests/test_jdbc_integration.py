@@ -12,8 +12,7 @@ database, coverage is one env var away:
 
 What runs then: round-trip a small person table through the Spark JDBC
 sink, read it back partitioned via read_person_table_jdbc (keyset-range
-parallel scan + upper-bound snapshot pin), and stage a batch with
-write_jdbc_staged.
+parallel scan + upper-bound snapshot pin).
 """
 
 from __future__ import annotations
@@ -85,25 +84,6 @@ def test_jdbc_roundtrip_partitioned_scan(spark):
         spark, URL, "nm_spark_it_persons", USER, PASSWORD, upper_bound=2
     )
     assert pinned.count() == 2
-
-
-@live
-def test_jdbc_staged_write(spark):
-    from name_match_latest_spark.sources.staging import write_jdbc_staged
-
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    stage = write_jdbc_staged(
-        df, URL, "nm_spark_it_persons", job_id="it-job-1", properties=_props()
-    )
-    assert stage.startswith("_nm_stage")
-    back = (
-        spark.read.format("jdbc")
-        .option("url", URL)
-        .option("dbtable", stage)
-        .options(**_props())
-        .load()
-    )
-    assert back.count() == len(ROWS)
 
 
 def test_cli_jdbc_url_routing_parses():

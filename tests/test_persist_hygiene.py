@@ -13,6 +13,26 @@ def _persistent_ids(spark) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
+def _settled_baseline(spark) -> set[int]:
+    """Persistent RDD ids once earlier tests' garbage is gone.  Spark's
+    ContextCleaner unpersists an RDD (e.g. a localCheckpoint) when a
+    JVM GC collects it, so a baseline read while such RDDs are still
+    collectable can shrink during the test at any GC."""
+    import gc
+    import time
+
+    gc.collect()
+    ids = None
+    for _ in range(40):
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.25)
+        now = _persistent_ids(spark)
+        if now == ids:
+            break
+        ids = now
+    return ids
+
+
 def test_fuzzy_matchers_release_caches(spark):
     from name_match_latest_spark.operators.algos import (
         match_fuzzy,
@@ -46,7 +66,7 @@ def test_run_cascade_releases_caches(spark):
 
     unpersist_tracked()
     spark.catalog.clearCache()
-    baseline = _persistent_ids(spark)
+    baseline = _settled_baseline(spark)
 
     p1, p2 = generate_persons(80, seed=9)
     t1, t2 = persons_df(spark, p1), persons_df(spark, p2)

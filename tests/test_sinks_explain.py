@@ -1,4 +1,4 @@
-"""Sinks, explain mode, partitioner helpers."""
+"""Sinks and explain mode."""
 
 from __future__ import annotations
 
@@ -95,15 +95,3 @@ def test_match_csv_sink_threshold(spark, tmp_path):
     assert row.algorithm == "FuzzyNoMiddle"
     assert row.n_matches == m.count()
     assert row.conf_p50 is not None
-
-
-def test_partitioners(spark):
-    from name_match_latest_spark.operators.blocking import (
-        repartition_birth_year_ranges,
-        repartition_last_initial,
-    )
-
-    t1, _ = generate_persons(10, seed=2)
-    d1 = persons_df(spark, t1)
-    assert repartition_last_initial(d1).rdd.getNumPartitions() == 27
-    assert repartition_birth_year_ranges(d1).count() == d1.count()
