@@ -15,7 +15,7 @@ keep working.  Algo numbering matches the reference: 1/2 exact,
 weighted; plus ``cascade`` for the L1-L11 workflow.
 
     python -m name_match_latest_spark TABLE1 TABLE2 ALGO OUT_PATH
-        [--format csv|parquet] [--threshold F]
+        [--format csv|parquet|xlsx] [--threshold F]
         [--allow-birthdate-swap] [--direct-fuzzy-normalization]
         [--master URL] [--cascade-levels 1,2,3,10,11]
 """
@@ -37,7 +37,9 @@ _IGNORED_GPU_FLAGS = {
 
 
 def _load_table(spark, path: str):
-    from .operators.persons import apply_column_mapping, prepare_persons
+    from pyspark.sql import functions as F
+
+    from .operators.persons import PERSON_SCHEMA, prepare_persons
     from .sources.csv_source import load_persons_csv
     from .sources.excel_source import load_persons_xlsx
 
@@ -50,8 +52,14 @@ def _load_table(spark, path: str):
         df = load_persons_xlsx(spark, path)
     else:
         df = spark.read.parquet(path)
-    # missing optional person columns (hh_id, geo codes) become NULLs
-    return prepare_persons(apply_column_mapping(df, {}))
+    # a parquet or JDBC table may lack the optional person columns
+    # (hh_id, geo codes): they become NULLs
+    missing = {
+        f.name: F.lit(None).cast(f.dataType)
+        for f in PERSON_SCHEMA.fields
+        if f.name not in df.columns
+    }
+    return prepare_persons(df.withColumns(missing))
 
 
 def _parse_jdbc_arg(url: str) -> tuple[str, str, str, str]:
@@ -128,6 +136,8 @@ def run(argv: list[str] | None = None) -> int:
     t1 = _load_table(spark, args.table1)
     t2 = _load_table(spark, args.table2)
 
+    from pyspark.sql import functions as F
+
     from .operators.algos import (
         match_algo1,
         match_algo2,
@@ -145,28 +155,27 @@ def run(argv: list[str] | None = None) -> int:
         # unpersisted result would re-execute the entire match lineage
         # a second time (parquet counts come from footer metadata;
         # header=True handles Spark's per-part-file CSV headers)
+        if not household:
+            # every format skips pairs below the threshold at write
+            # time (csv_export.rs:151-154); households were already
+            # aggregated at it
+            df = df.filter(F.col("confidence") >= args.threshold)
+        order = ["uuid", "hh_id"] if household else ["t1_id", "t2_id"]
         if args.format == "parquet":
-            order = ["uuid", "hh_id"] if household else ["t1_id", "t2_id"]
             df.orderBy(*order).write.mode("overwrite").parquet(args.out_path)
             return spark.read.parquet(args.out_path).count()
         if args.format == "xlsx":
-            from pyspark.sql import functions as F
-
             from .sources.xlsx import write_matches_xlsx
 
-            order = ["uuid", "hh_id"] if household else ["t1_id", "t2_id"]
-            out = df if household else df.filter(
-                F.col("confidence") >= args.threshold
-            )
             # total_rows, not rows_written: the sheet is capped at 100k
             # rows and the CLI must report the REAL match count
-            return write_matches_xlsx(out.orderBy(*order), args.out_path)[
+            return write_matches_xlsx(df.orderBy(*order), args.out_path)[
                 "total_rows"
             ]
         if household:
             write_households_csv(df, args.out_path)
         else:
-            write_matches_csv(df, args.out_path, fuzzy_threshold=args.threshold)
+            write_matches_csv(df, args.out_path)
         return spark.read.option("header", True).csv(args.out_path).count()
 
     algo = args.algo.lower()
@@ -192,8 +201,6 @@ def run(argv: list[str] | None = None) -> int:
             CascadeConfig(levels=levels, threshold=args.threshold,
                           allow_birthdate_swap=swap),
         )
-        from pyspark.sql import functions as F
-
         out = None
         for lr in results:
             lvl = lr.matches.withColumn("level", F.lit(lr.level))

@@ -217,8 +217,8 @@ def match_fuzzy_no_mid(t1: DataFrame, t2: DataFrame, allow_swap: bool = False) -
     (``match_fuzzy_no_mid_cpu_gpu_equivalent`` mod.rs:2906-3013).
     Candidates are t2 rows whose exact date equals t1's date or its
     swap — realized by exploding t1's key set (mod.rs:2972-2984).
-    Birthdate blocks are the skew hot-spot: AQE skew-join handles
-    moderate skew; use blocking.salted_join for pathological keys."""
+    Birthdate blocks are the skew hot-spot; AQE skew-join splitting
+    (on in session.py) handles them."""
     t1 = _require(t1, "birthdate")
     t2 = _require(t2, "birthdate")
     t1e = t1.withColumn("_bd_key", F.explode(bd_key_array_col(F.col("birthdate"), allow_swap)))

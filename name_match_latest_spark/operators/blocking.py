@@ -10,9 +10,8 @@ predicate becomes key expansion (explode).
 Skew: birthdate and common-surname blocks are Zipfian.  Defenses, in
 order: (a) AQE skew-join splitting (on by default in session.py);
 (b) ``block_size_guard`` — the reference's explicit oversized-block
-skip (advanced_matcher.rs:193-216) as a count-over-window filter;
-(c) ``salted_join`` for the 100TB path — replicate the build side k
-ways so a hot key spreads over k reducers.
+skip (advanced_matcher.rs:193-216) as a broadcast left-anti join
+against the oversized keys.
 """
 
 from __future__ import annotations
@@ -27,7 +26,6 @@ __all__ = [
     "algo3_fallback1_key",
     "algo3_fallback2_key",
     "block_size_guard",
-    "salted_join",
     "block_histogram",
 ]
 
@@ -104,8 +102,7 @@ def algo3_fallback2_key(p: str = "") -> Column:
 
 def block_histogram(df: DataFrame, key: Column) -> DataFrame:
     """groupBy(block_key).count() — the reference's candidate-pair
-    estimator (mod.rs:1863-1902); we reuse it for salt-factor and
-    guard decisions."""
+    estimator (mod.rs:1863-1902)."""
     return df.groupBy(key.alias("block_key")).count()
 
 
@@ -123,27 +120,4 @@ def block_size_guard(df: DataFrame, key: Column, limit: int | None) -> DataFrame
     )
     return df.join(
         F.broadcast(oversized), on=[key == F.col("_gk")], how="left_anti"
-    )
-
-
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: Column,
-    build_key: Column,
-    salt: int,
-) -> DataFrame:
-    """Skew-defused equi-join: the probe side gets a random salt in
-    [0, salt); the build side is replicated ``salt`` ways.  Use when a
-    single block key exceeds what one reducer should handle even after
-    AQE splitting (100TB path; birthdate blocks are the hot spot —
-    mod.rs:2925-2930)."""
-    salted_probe = probe.withColumns(
-        {"_bk": probe_key, "_salt": (F.rand(seed=42) * salt).cast("int")}
-    )
-    salted_build = build.withColumns(
-        {"_bk": build_key, "_salt": F.explode(F.array([F.lit(i) for i in range(salt)]))}
-    )
-    return salted_probe.join(salted_build, on=["_bk", "_salt"], how="inner").drop(
-        "_bk", "_salt"
     )

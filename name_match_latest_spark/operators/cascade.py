@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.caching import tracked_cache
-from .blocking import pair_join
+from .blocking import block_size_guard, pair_join
 from .dates import bd_key_array_col, bd_match_cond
 from .scoring import score_pairs
 
@@ -134,10 +134,7 @@ def _fuzzy_level(
         # reference's :302-330 loop): a pair whose primary block was
         # guarded away can still surface through the swap probe, so
         # the guarded path keeps the two-side explode + pair dedup.
-        oversized = (
-            t2e.groupBy("_bdk").count().filter(F.col("count") > max_block).select("_bdk")
-        )
-        t2e = t2e.join(F.broadcast(oversized), "_bdk", "left_anti")
+        t2e = block_size_guard(t2e, F.col("_bdk"), max_block)
         t1e = t1.withColumn(
             "_bdk", F.explode(bd_key_array_col(F.col("birthdate"), swap))
         )

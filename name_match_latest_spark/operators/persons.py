@@ -46,8 +46,6 @@ __all__ = [
     "simple_col",
     "soundex4_col",
     "prepare_persons",
-    "apply_column_mapping",
-    "DERIVED_COLS",
 ]
 
 PERSON_SCHEMA = StructType(
@@ -114,32 +112,6 @@ def _block_initial(name_n: Column) -> Column:
     fallback (mod.rs:2778-2787)."""
     init = F.upper(F.regexp_extract(name_n, "[a-zA-Z]", 0))
     return F.when(name_n.isNull() | (init == ""), F.lit("?")).otherwise(init)
-
-
-def apply_column_mapping(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Flexible-schema rename indirection (models.rs:59-82
-    ColumnMapping): ``{engine_name: source_name}``; unmapped optional
-    person columns are added as NULLs, unmapped source columns pass
-    through as extra fields."""
-    out = df
-    for target, source in mapping.items():
-        if source in out.columns and source != target:
-            out = out.withColumnRenamed(source, target)
-    for field in PERSON_SCHEMA.fields:
-        if field.name not in out.columns:
-            out = out.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return out
-
-
-#: columns added by prepare_persons (beyond the input columns)
-DERIVED_COLS = [
-    "first_n", "middle_n", "last_n",
-    "simple_first", "simple_mid", "simple_last",
-    "simple_full", "simple_full_no_mid",
-    "dmeta_full", "dmeta_no_mid",
-    "first_init", "last_init", "sx_last_n",
-    "birth_year", "bd_str",
-]
 
 
 def prepare_persons(df: DataFrame) -> DataFrame:

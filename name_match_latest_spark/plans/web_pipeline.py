@@ -4,7 +4,7 @@
       -> extract mentions (Arrow batch, byte-identical extractor)
       -> person-shaped mentions with content-stable ids
       -> blocking on (soundex4(last_n), lang, url_domain) composite key
-         [salted / AQE-skew-handled; html column pruned before shuffle]
+         [AQE-skew-handled; html column pruned before shuffle]
       -> pairwise scoring cascade (exact -> lev -> JW -> metaphone,
          JVM + one Arrow UDF) + birthdate equality
       -> match edges -> large-star/small-star connected components

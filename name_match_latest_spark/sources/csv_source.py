@@ -1,6 +1,8 @@
-"""CSV person-table source with the reference loader's semantics.
+"""Person-table sources: the one projection from a table of header-named
+string cells to the person schema, and the CSV loader built on it.
 
-Mirrors ``src/loaders/csv_loader.rs``:
+Mirrors ``src/loaders/csv_loader.rs`` (the Excel loader,
+``excel_source``, feeds the same projection):
 
 * header-hint column-mapping inference (:593-628): exact normalized
   match first, then substring match, hint priority order
@@ -11,7 +13,8 @@ Mirrors ``src/loaders/csv_loader.rs``:
 * formula-injection risk flag for cells starting = + - @ (:719-731)
 
 The read itself is ``spark.read.csv`` (distributed, pushdown-capable);
-everything here is mapping + projection on top.
+everything here is mapping + projection on top, as Column expressions
+except the hash id.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "infer_mapping",
+    "person_table",
     "load_persons_csv",
     "formula_injection_col",
 ]
@@ -34,6 +38,8 @@ _HINTS: dict[str, tuple[list[str], bool]] = {
     "last_name": (["last_name", "lastname", "lname", "surname"], True),
     "birthdate": (["birthdate", "birth_date", "birthday", "dob"], True),
     "hh_id": (["hh_id", "household_id"], False),
+    "barangay_code": (["barangay_code"], False),
+    "city_code": (["city_code"], False),
 }
 
 
@@ -48,23 +54,25 @@ def infer_mapping(headers: list[str]) -> dict[str, str | None]:
     """Header-hint inference (csv_loader.rs:593-628): for each target
     column, first an exact normalized-name match over the hint list,
     then a substring match; None when nothing matches (required
-    columns may legitimately be absent — id falls back to row hash)."""
+    columns may legitimately be absent — id falls back to row hash).
+
+    The substring pass skips headers that are exactly some target's
+    hint: ``household_id`` or ``uuid`` contain ``id`` but are the
+    hh_id and uuid columns, never the person id."""
+    all_hints = {_norm_header(h) for hints, _ in _HINTS.values() for h in hints}
     normalized = {_norm_header(h): h for h in headers}
+    loose = [h for h in headers if _norm_header(h) not in all_hints]
     out: dict[str, str | None] = {}
     for target, (hints, _required) in _HINTS.items():
-        found = None
-        for hint in hints:
-            if _norm_header(hint) in normalized:
-                found = normalized[_norm_header(hint)]
-                break
+        found = next(
+            (normalized[_norm_header(x)] for x in hints if _norm_header(x) in normalized),
+            None,
+        )
         if found is None:
-            for hint in hints:
-                for h in headers:
-                    if _norm_header(hint) in _norm_header(h):
-                        found = h
-                        break
-                if found:
-                    break
+            found = next(
+                (h for x in hints for h in loose if _norm_header(x) in _norm_header(h)),
+                None,
+            )
         out[target] = found
     return out
 
@@ -106,61 +114,71 @@ def formula_injection_col(c: Column) -> Column:
     return first.isin("=", "+", "-", "@")
 
 
+def _col(header: str) -> Column:
+    """The column named ``header`` verbatim: backquoted, so a dot in a
+    file's header is not read as a struct-field access."""
+    return F.col("`" + header.replace("`", "``") + "`")
+
+
+def person_table(raw: DataFrame) -> DataFrame:
+    """Project a table of string cells, named by the file's headers,
+    onto the person schema: the one mapping shared by the CSV and the
+    Excel loader.
+
+    Returns columns: id, uuid, first_name, middle_name, last_name,
+    birthdate, hh_id, barangay_code, city_code, then
+    ``formula_injection_risk`` (boolean), then every unmapped source
+    column passed through (the reference's extra_fields).
+
+    * ``id``: a non-empty cell that parses as an integer (``7``,
+      ``7.0``, ``1E3``), else the content-hash id of the whole row;
+    * ``birthdate``: strict trimmed ``yyyy-MM-dd``, else NULL.
+
+    A malformed cell becomes NULL (or a hash id); it never fails the
+    load, whatever ``spark.sql.ansi.enabled`` says.
+    """
+    headers = raw.columns
+    m = infer_mapping(headers)
+
+    def mapped(target: str) -> Column:
+        h = m[target]
+        return _col(h) if h else F.lit(None).cast("string")
+
+    row_hash = _stable_id_udf(headers)(*[_col(h) for h in headers])
+    # decimal(38,18) holds every bigint, so integral decimals keep
+    # their exact value; try_cast is NULL for fractions and overflow
+    id_num = mapped("id").try_cast("decimal(38,18)")
+    id_int = F.when(id_num == F.floor(id_num), id_num.try_cast("long"))
+    bd = F.trim(mapped("birthdate"))
+    birthdate = F.when(F.length(bd) == 10, F.try_to_date(bd, "yyyy-MM-dd"))
+
+    injection = F.lit(False)
+    for h in headers:
+        injection = injection | formula_injection_col(_col(h))
+    taken = {h for h in m.values() if h}
+    return raw.select(
+        F.coalesce(id_int, row_hash).alias("id"),
+        *[
+            birthdate.alias(t) if t == "birthdate" else mapped(t).alias(t)
+            for t in _HINTS if t != "id"
+        ],
+        F.coalesce(injection, F.lit(False)).alias("formula_injection_risk"),
+        *[_col(h) for h in headers if h not in taken],
+    )
+
+
 def load_persons_csv(
     spark: SparkSession,
     path: str,
     encoding: str = "UTF-8",
     sep: str = ",",
-    mapping: dict[str, str | None] | None = None,
 ) -> DataFrame:
-    """Read a person CSV into the engine's person schema.
-
-    Returns columns: id, uuid, first_name, middle_name, last_name,
-    birthdate (strict yyyy-MM-dd else NULL), hh_id, plus every
-    unmapped source column passed through (the reference's
-    extra_fields), plus ``formula_injection_risk`` (boolean).
-    """
+    """Read a person CSV (header row required) into the person schema
+    via :func:`person_table`."""
     if encoding.lower() not in (
         "utf-8", "us-ascii", "iso-8859-1", "utf-16", "utf-16be", "utf-16le", "utf-32"
     ):
         # Spark 4 restricts CSV charsets by default; the reference reads
         # Windows-1252 and friends (csv_loader.rs chardetng detection)
         spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-    raw = spark.read.csv(path, header=True, encoding=encoding, sep=sep)
-    headers = raw.columns
-    m = mapping or infer_mapping(headers)
-
-    def col_or_null(name: str | None) -> Column:
-        return F.col(name) if name else F.lit(None).cast("string")
-
-    if m.get("id"):
-        id_col = F.when(
-            F.col(m["id"]).isNotNull() & (F.col(m["id"]) != ""),
-            F.col(m["id"]).cast("long"),
-        ).otherwise(_stable_id_udf(headers)(*[F.col(h) for h in headers]))
-    else:
-        id_col = _stable_id_udf(headers)(*[F.col(h) for h in headers])
-
-    bd_raw = col_or_null(m.get("birthdate"))
-    birthdate = F.when(
-        F.length(F.trim(bd_raw)) == 10, F.to_date(F.trim(bd_raw), "yyyy-MM-dd")
-    )
-
-    mapped = {v for v in m.values() if v}
-    passthrough = [h for h in headers if h not in mapped]
-    injection = None
-    for h in headers:
-        cell = formula_injection_col(F.col(h))
-        injection = cell if injection is None else (injection | cell)
-
-    return raw.select(
-        id_col.alias("id"),
-        col_or_null(m.get("uuid")).alias("uuid"),
-        col_or_null(m.get("first_name")).alias("first_name"),
-        col_or_null(m.get("middle_name")).alias("middle_name"),
-        col_or_null(m.get("last_name")).alias("last_name"),
-        birthdate.alias("birthdate"),
-        col_or_null(m.get("hh_id")).alias("hh_id"),
-        F.coalesce(injection, F.lit(False)).alias("formula_injection_risk"),
-        *[F.col(h) for h in passthrough],
-    )
+    return person_table(spark.read.csv(path, header=True, encoding=encoding, sep=sep))

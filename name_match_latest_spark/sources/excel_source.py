@@ -9,19 +9,23 @@ reference's workflow (operator config, small reference lists) — the
 parse happens once on the driver and becomes a distributed DataFrame
 via ``createDataFrame``; big tables belong in Parquet/CSV/JDBC.
 
-Column mapping + strict-date semantics are shared with the CSV loader.
+Only the Excel date serials are handled here: everything else (column
+mapping, ids, strict dates) is the CSV loader's ``person_table``.
 """
 
 from __future__ import annotations
 
+import math
 import re
 import zipfile
+from collections import Counter
 from datetime import date, timedelta
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
-from .csv_source import infer_mapping
+from .csv_source import infer_mapping, person_table
 
 __all__ = ["read_xlsx_rows", "load_persons_xlsx", "excel_serial_to_date"]
 
@@ -33,7 +37,7 @@ def excel_serial_to_date(serial: float) -> date | None:
     """1900 date system with the classic Lotus leap-year bug: serial 1
     = 1900-01-01, serials >= 60 are offset by the phantom 1900-02-29
     (calamine/excel_loader.rs:299-306 semantics)."""
-    if serial < 1:
+    if not (math.isfinite(serial) and serial >= 1):
         return None
     days = int(serial)
     if days >= 60:
@@ -109,52 +113,32 @@ def read_xlsx_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
     return headers, rows
 
 
+def _iso_birthdate(cell: str | None) -> str | None:
+    """A numeric cell is an Excel date serial: its ISO date, or None
+    when it names no date.  Any other cell is left for the strict
+    ``yyyy-MM-dd`` parse."""
+    try:
+        serial = float(cell)
+    except (TypeError, ValueError):
+        return cell
+    d = excel_serial_to_date(serial)
+    return d.isoformat() if d else None
+
+
 def load_persons_xlsx(spark: SparkSession, path: str) -> DataFrame:
-    """xlsx -> person DataFrame: header-hint mapping (shared with the
-    CSV loader), strict dates accepting EITHER yyyy-MM-dd strings or
-    Excel date serials; the geo codes the L4-L9 cascade keys need are
-    read from the same-named headers."""
+    """xlsx -> person DataFrame through the CSV loader's
+    :func:`~.csv_source.person_table`; birthdate cells may also be
+    Excel date serials.  Empty cells are NULL, as in a CSV read."""
     headers, rows = read_xlsx_rows(path)
-    m = infer_mapping(headers)
-    hidx = {h: i for i, h in enumerate(headers)}
-
-    def get(row, key):
-        i = hidx.get(m.get(key, key))
-        v = row[i] if i is not None else None
-        return v if v != "" else None
-
-    out_rows = []
-    for i, row in enumerate(rows):
-        bd_raw = get(row, "birthdate")
-        bd = None
-        if bd_raw is not None:
-            s = str(bd_raw).strip()
-            if re.fullmatch(r"\d{4}-\d{2}-\d{2}", s):
-                try:
-                    y, mo, d = (int(x) for x in s.split("-"))
-                    bd = date(y, mo, d)
-                except ValueError:
-                    bd = None
-            else:
-                try:
-                    bd = excel_serial_to_date(float(s))
-                except ValueError:
-                    bd = None
-        raw_id = get(row, "id")
-        pid = int(float(raw_id)) if raw_id is not None else i + 1
-        out_rows.append(
-            (
-                pid,
-                get(row, "uuid"),
-                get(row, "first_name"),
-                get(row, "middle_name"),
-                get(row, "last_name"),
-                bd,
-                get(row, "hh_id"),
-                get(row, "barangay_code"),
-                get(row, "city_code"),
-            )
-        )
-    from ..operators.persons import PERSON_SCHEMA
-
-    return spark.createDataFrame(out_rows, PERSON_SCHEMA)
+    # repeated headers get their column index appended, as
+    # spark.read.csv names them
+    seen = Counter(h.lower() for h in headers)
+    headers = [f"{h}{i}" if seen[h.lower()] > 1 else h for i, h in enumerate(headers)]
+    cells = [[v if v != "" else None for v in row] for row in rows]
+    bd = infer_mapping(headers)["birthdate"]
+    if bd is not None:
+        i = headers.index(bd)
+        for row in cells:
+            row[i] = _iso_birthdate(row[i])
+    schema = StructType([StructField(h, StringType()) for h in headers])
+    return person_table(spark.createDataFrame(cells, schema))

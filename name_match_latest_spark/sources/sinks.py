@@ -1,9 +1,9 @@
 """Sinks: match-pair and household writers + run summary.
 
 Reference parity:
-* CSV match sink with threshold filter at write time
-  (csv_export.rs:10-207, skip-below-threshold :151-154) — the
-  threshold is just a filter; Spark's committer gives atomicity.
+* CSV match sink (csv_export.rs:10-207); its skip-below-threshold
+  (:151-154) is a filter the CLI applies before any writer; Spark's
+  committer gives atomicity.
 * Household CSV sink (csv_export.rs:211-300).
 * XLSX summary sheet (xlsx_export.rs:14-60) — re-expressed as a run
   summary DataFrame (counts, timings, percentiles) written next to
@@ -28,20 +28,15 @@ MATCH_OUTPUT_COLS = [
 ]
 
 
-def write_matches_csv(
-    matches: DataFrame, path: str, fuzzy_threshold: float | None = None
-) -> None:
-    """Deterministically ordered match CSV; rows below the fuzzy
-    threshold are skipped at write time (csv_export.rs:151-154;
-    threshold semantics main.rs:1634-1652 — 0-1 scale)."""
-    out = matches
-    if fuzzy_threshold is not None:
-        out = out.filter(F.col("confidence") >= fuzzy_threshold)
-    cols = [c for c in MATCH_OUTPUT_COLS if c in out.columns]
+def write_matches_csv(matches: DataFrame, path: str) -> None:
+    """Deterministically ordered match CSV.  The threshold filter
+    (csv_export.rs:151-154) is the caller's: the CLI applies it once
+    for every output format."""
+    cols = [c for c in MATCH_OUTPUT_COLS if c in matches.columns]
     extra = [
-        c for c in ("matched_fields",) if c in out.columns
+        c for c in ("matched_fields",) if c in matches.columns
     ]
-    proj = out.select(
+    proj = matches.select(
         *cols, *[F.array_join(F.col(c), ";").alias(c) for c in extra]
     )
     proj.orderBy("t1_id", "t2_id").write.mode("overwrite").option(

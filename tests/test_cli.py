@@ -295,3 +295,31 @@ def test_cli_jdbc_passthrough_params_stay_verbatim(monkeypatch):
     assert captured["url"] == (
         "jdbc:mysql://h/db?sessionVariables=sql_mode%3DANSI&flag=a&flag=b"
     )
+
+
+def test_cli_threshold_same_in_every_format(tables):
+    """--threshold drops the same pairs whatever --format writes: the
+    fixture's algo 3 run has pairs below 0.95, which parquet output
+    used to keep."""
+    import pyarrow.parquet as pq
+
+    from name_match_latest_spark.sources.excel_source import read_xlsx_rows
+
+    t1, t2, root = tables
+    got = {}
+    for fmt, name in (("csv", "thr_csv"), ("parquet", "thr_pq"), ("xlsx", "thr.xlsx")):
+        out = os.path.join(root, name)
+        res = _run_cli([t1, t2, "3", out, "--format", fmt, "--threshold", "0.95"])
+        assert res.returncode == 0, res.stderr[-2000:]
+        if fmt == "csv":
+            pairs = _pair_set(out)
+        elif fmt == "parquet":
+            cols = pq.read_table(out, columns=["t1_id", "t2_id"]).to_pydict()
+            pairs = set(zip(cols["t1_id"], cols["t2_id"]))
+        else:
+            header, rows = read_xlsx_rows(out)
+            i, j = header.index("t1_id"), header.index("t2_id")
+            pairs = {(r[i], r[j]) for r in rows}
+        got[fmt] = {(int(a), int(b)) for a, b in pairs}
+        assert int(res.stdout.split("matches=")[1].split()[0]) == len(got[fmt])
+    assert got["csv"] and got["csv"] == got["parquet"] == got["xlsx"]

@@ -29,7 +29,7 @@ def test_csv_to_match_csv(spark, tmp_path):
     d2 = prepare_persons(load_persons_csv(spark, str(b)))
     matches = match_fuzzy_no_mid(d1, d2)
     out = str(tmp_path / "out")
-    write_matches_csv(matches, out, fuzzy_threshold=0.85)
+    write_matches_csv(matches.filter("confidence >= 0.85"), out)
     back = spark.read.option("header", True).csv(out)
     got = {(int(r.t1_id), int(r.t2_id)) for r in back.collect()}
     assert got == {(1, 11), (2, 12)}

@@ -265,8 +265,8 @@ def test_load_persons_xlsx_strict_dates(spark, tmp_path):
 def test_load_persons_xlsx_ids_and_aliases(spark, tmp_path):
     """Header aliases (person_id, given_name, surname, household_id,
     uuid) map to the person columns; numeric ids written as floats
-    become integers; empty cells are NULL; without any id-like header,
-    ids are the 1-based data-row numbers."""
+    become integers; empty cells are NULL; without an id header, ids
+    are the content-hash ids the CSV loader gives the same cells."""
     from name_match_latest_spark.sources.xlsx import write_xlsx
 
     p = str(tmp_path / "aliases.xlsx")
@@ -278,5 +278,10 @@ def test_load_persons_xlsx_ids_and_aliases(spark, tmp_path):
 
     q = str(tmp_path / "noid.xlsx")
     write_xlsx(q, {"p": (["given_name", "surname"], [("ana", "cruz"), ("jose", "santos")])})
+    c = tmp_path / "noid.csv"
+    c.write_text("given_name,surname\nana,cruz\njose,santos\n")
+    from name_match_latest_spark.sources.csv_source import load_persons_csv
+
     got = sorted((r.id, r.first_name) for r in load_persons_xlsx(spark, q).collect())
-    assert got == [(1, "ana"), (2, "jose")]
+    want = sorted((r.id, r.first_name) for r in load_persons_csv(spark, str(c)).collect())
+    assert got == want and {i for i, _ in got}.isdisjoint({1, 2})

@@ -105,3 +105,54 @@ def test_opt6_hh_fallback_to_id(spark):
     # opt5: each t1 member matched into a DIFFERENT fallback household,
     # so per-(uuid, hh) percentage is 1/2 = 50% -> filtered out (>50 rule)
     assert got5 == []
+
+
+def test_cascade_fuzzy_block_guard(spark):
+    """``max_fuzzy_block`` drops exactly the L10/L11 pairs whose shared
+    birthdate keys are all oversized t2 keys (more t2 rows than the
+    limit) and keeps every other pair."""
+    from collections import Counter
+    from dataclasses import replace
+    from datetime import date
+
+    from name_match_latest_spark.functions.normalize import is_full_middle
+    from name_match_latest_spark.operators.cascade import CascadeConfig, run_cascade
+    from name_match_latest_spark.operators.dates import birthdate_keys
+
+    t1, t2 = generate_persons(50, seed=11)
+    limit = 4
+    # eight t1 people and their t2 copies share one birthdate, a block
+    # of eight t2 rows; 1970-03-25 has no month/day swap
+    planted = [
+        replace(p, birthdate=date(1970, 3, 25), middle_name="Bautista") for p in t1[:8]
+    ]
+    t1 = planted + t1[8:]
+    t2 = t2 + [replace(p, id=900_000 + i) for i, p in enumerate(planted)]
+    d1, d2 = persons_df(spark, t1), persons_df(spark, t2)
+
+    def pairs(max_block):
+        cfg = CascadeConfig(
+            levels=[10, 11], threshold=0.8, allow_birthdate_swap=True,
+            exclusive=False, max_fuzzy_block=max_block,
+        )
+        return {
+            lr.level: {(r.t1_id, r.t2_id) for r in lr.matches.select("t1_id", "t2_id").collect()}
+            for lr in run_cascade(d1, d2, cfg)
+        }
+
+    unguarded, guarded = pairs(None), pairs(limit)
+    bd1 = {p.id: p.birthdate for p in t1}
+    bd2 = {p.id: p.birthdate for p in t2}
+    for level, swap in ((10, True), (11, False)):  # L11 never swaps
+        side = [
+            p for p in t2
+            if p.birthdate and (level == 11 or is_full_middle((p.middle_name or "").strip()))
+        ]
+        sizes = Counter(k for p in side for k in birthdate_keys(p.birthdate, swap))
+        oversized = {k for k, n in sizes.items() if n > limit}
+        keep = {
+            (a, b) for a, b in unguarded[level]
+            if set(birthdate_keys(bd1[a], swap)) & set(birthdate_keys(bd2[b], swap)) - oversized
+        }
+        assert guarded[level] == keep, f"level {level}"
+        assert keep and keep < unguarded[level]

@@ -85,7 +85,9 @@ def test_match_csv_sink_threshold(spark, tmp_path):
     import time
 
     out = str(tmp_path / "m")
-    write_matches_csv(m, out, fuzzy_threshold=0.95)
+    # the sink writes every pair it is given: the CLI filters by
+    # --threshold before any writer
+    write_matches_csv(m.filter("confidence >= 0.95"), out)
     back = spark.read.option("header", True).csv(out)
     assert back.count() == m.filter("confidence >= 0.95").count()
     assert "matched_fields" in back.columns
