@@ -458,13 +458,13 @@ WHERE pa.birthdate IS NOT NULL AND pb.birthdate IS NOT NULL
 )
 def _algo4_prefilter(spark, sf_dir):
     from .functions.udfs import jaro_winkler_udf
-    from .operators.blocking import pair_join
+    from .operators.blocking import birthdate_pairs
     from .operators.scoring import sim_lev_pct_col
 
     t1, t2 = load_persons(spark, sf_dir)
     t1 = t1.filter(F.col("birthdate").isNotNull())
     t2 = t2.filter(F.col("birthdate").isNotNull())
-    pairs = pair_join(t1, t2, lambda p: [F.col(f"{p}bd_str")])
+    pairs = birthdate_pairs(t1, t2, allow_swap=False)
     lev = sim_lev_pct_col(F.col("t1_simple_full_no_mid"), F.col("t2_simple_full_no_mid"))
     jw = jaro_winkler_udf(F.col("t1_simple_full_no_mid"), F.col("t2_simple_full_no_mid")) * 100.0
     return (
@@ -1364,13 +1364,13 @@ def _score_breakdown(spark, sf_dir):
     its lev/jw/mp metrics, case label (NULL = non-match) and
     confidence — the explain=True projection of score_pairs."""
     from .operators.algos import _require
-    from .operators.blocking import pair_join
+    from .operators.blocking import birthdate_pairs
     from .operators.scoring import score_pairs
 
     t1, t2 = load_persons(spark, sf_dir)
     t1 = _require(t1, "birthdate")
     t2 = _require(t2, "birthdate")
-    pairs = pair_join(t1, t2, lambda p: [F.col(f"{p}bd_str")])
+    pairs = birthdate_pairs(t1, t2, allow_swap=False)
     out = score_pairs(pairs, no_middle=True, explain=True)
     return out.select(
         "t1_id",

@@ -24,10 +24,10 @@ from .blocking import (
     algo3_block_key,
     algo3_fallback1_key,
     algo3_fallback2_key,
+    birthdate_pairs,
     pair_join,
-    prefix_cols,
 )
-from .dates import bd_key_array_col, bd_match_cond
+from .dates import bd_match_cond
 from .persons import soundex4_col
 from .scoring import score_pairs, sim_lev_pct_col
 
@@ -65,22 +65,6 @@ def _require(df: DataFrame, *cols: str) -> DataFrame:
     return df.filter(cond)
 
 
-def _bd_equi_join(t1: DataFrame, t2: DataFrame, extra_t1_keys, extra_t2_keys, allow_swap: bool) -> DataFrame:
-    """Equi-join with birthdate key expansion on the t2 side: t2's key
-    set is [d2] (+ [swap(d2)] when allowed), probed by t1's exact date
-    — realizes ``b1==b2 or swap(b2)==b1`` (birthdate_matcher.rs:85-95)
-    as a pure equi-join."""
-    t2e = t2.withColumn("_bd_key", F.explode(bd_key_array_col(F.col("birthdate"), allow_swap)))
-
-    def k1(p):
-        return extra_t1_keys(p) + [F.col(f"{p}bd_str")]
-
-    def k2(p):
-        return extra_t2_keys(p) + [F.col(f"{p}_bd_key")]
-
-    return pair_join(t1, t2e, k1, k2).drop("t2__bd_key")
-
-
 def match_algo1(
     t1: DataFrame, t2: DataFrame, allow_swap: bool = False,
     direct_norm_fuzzy: bool = False,
@@ -100,7 +84,7 @@ def match_algo1(
     def keys(p):
         return [wrap(F.col(f"{p}last_n")), wrap(F.col(f"{p}first_n"))]
 
-    pairs = _bd_equi_join(t1, t2, keys, keys, allow_swap)
+    pairs = birthdate_pairs(t1, t2, allow_swap, keys)
     return pairs.withColumns(
         {
             "confidence": F.lit(1.0),
@@ -132,7 +116,7 @@ def match_algo2(
             F.coalesce(wrap(F.col(f"{p}middle_n")), F.lit(_NULL_MARKER)),
         ]
 
-    pairs = _bd_equi_join(t1, t2, keys, keys, allow_swap)
+    pairs = birthdate_pairs(t1, t2, allow_swap, keys)
     return pairs.withColumns(
         {
             "confidence": F.lit(1.0),
@@ -216,19 +200,13 @@ def match_fuzzy_no_mid(t1: DataFrame, t2: DataFrame, allow_swap: bool = False) -
     """Algo 4 (FuzzyNoMiddle): birthdate-blocked
     (``match_fuzzy_no_mid_cpu_gpu_equivalent`` mod.rs:2906-3013).
     Candidates are t2 rows whose exact date equals t1's date or its
-    swap — realized by exploding t1's key set (mod.rs:2972-2984).
+    swap (mod.rs:2972-2984), from ``blocking.birthdate_pairs``; the
+    reference explodes t1's key set, which gives the same pairs.
     Birthdate blocks are the skew hot-spot; AQE skew-join splitting
     (on in session.py) handles them."""
     t1 = _require(t1, "birthdate")
     t2 = _require(t2, "birthdate")
-    t1e = t1.withColumn("_bd_key", F.explode(bd_key_array_col(F.col("birthdate"), allow_swap)))
-
-    pairs = pair_join(
-        t1e,
-        t2,
-        lambda p: [F.col(f"{p}_bd_key")],
-        lambda p: [F.col(f"{p}bd_str")],
-    ).drop("t1__bd_key")
+    pairs = birthdate_pairs(t1, t2, allow_swap)
     scored = score_pairs(pairs, no_middle=True)
     return scored.withColumn(
         "matched_fields",

@@ -5,7 +5,8 @@ Blocking is the reference's hand-rolled candidate-pair reduction
 Catalyst cannot invent for us.  Every blocking scheme becomes an
 equi-join on a derived key column; OR-blocking becomes a union of
 equi-joins; fallback tiers become anti-join retries; the swap
-predicate becomes key expansion (explode).
+predicate becomes key expansion (explode), in one place:
+``birthdate_pairs``.
 
 Skew: birthdate and common-surname blocks are Zipfian.  Defenses, in
 order: (a) AQE skew-join splitting (on by default in session.py);
@@ -19,9 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dates import bd_key_array_col
+
 __all__ = [
     "prefix_cols",
     "pair_join",
+    "birthdate_pairs",
     "algo3_block_key",
     "algo3_fallback1_key",
     "algo3_fallback2_key",
@@ -62,6 +66,53 @@ def pair_join(
         right = F.broadcast(right)
     joined = left.join(right, on=[f"_k{i}" for i in range(len(k1))], how="inner")
     return joined.drop(*[f"_k{i}" for i in range(len(k1))])
+
+
+def birthdate_pairs(
+    t1: DataFrame,
+    t2: DataFrame,
+    allow_swap: bool,
+    keys=lambda p: [],
+    max_block: int | None = None,
+) -> DataFrame:
+    """Pairs whose birthdates match — ``b1 == b2``, or with
+    ``allow_swap`` also ``b1 == swap(b2)`` (birthdate_matcher.rs:85-95)
+    — and whose extra ``keys`` (``prefix -> list[Column]``) are equal,
+    as an equi-join on PREPARED person DataFrames.
+
+    t2's distinct date keys K2 = {b2, swap(b2)} (``bd_key_array_col``,
+    birthdate_matcher.rs:49-61) are exploded and probed with t1's exact
+    date ``bd_str``.  b1 ∈ K2 is the predicate itself, and since K2 is
+    distinct each pair joins at most once.  Exploding t1 and probing
+    t2's date gives the same pairs: month/day swap is an involution
+    wherever both dates are valid (swap(b1) = b2 means b2's day is
+    b1's month <= 12, so swap(b2) is defined and equals b1).  NULL
+    dates have no key and never pair.
+
+    ``max_block`` is the oversized-block skip guard
+    (advanced_matcher.rs:193-216): t2 rows are dropped from every date
+    key carried by more than ``max_block`` t2 rows, counted by the date
+    key alone.  A pair whose primary block was dropped can still
+    surface through the swap key, so the guarded probe iterates t1's
+    own keys too (the reference's :302-330 loop): both sides explode,
+    a pair joins when K1 ∩ K2' is non-empty, and pairs are deduped.
+    """
+    def exploded(df):
+        return df.withColumn("_bdk", F.explode(bd_key_array_col(F.col("birthdate"), allow_swap)))
+
+    if max_block is None:
+        pairs = pair_join(
+            t1,
+            exploded(t2),
+            lambda p: keys(p) + [F.col(f"{p}bd_str")],
+            lambda p: keys(p) + [F.col(f"{p}_bdk")],
+        )
+    else:
+        t2e = block_size_guard(exploded(t2), F.col("_bdk"), max_block)
+        pairs = pair_join(
+            exploded(t1), t2e, lambda p: keys(p) + [F.col(f"{p}_bdk")]
+        ).dropDuplicates(["t1_id", "t2_id"])
+    return pairs.drop("t1__bdk", "t2__bdk")
 
 
 def algo3_block_key(p: str = "") -> Column:

@@ -15,8 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.caching import tracked_cache
-from .blocking import block_size_guard, pair_join
-from .dates import bd_key_array_col, bd_match_cond
+from .blocking import birthdate_pairs, pair_join
 from .scoring import score_pairs
 
 __all__ = ["CascadeConfig", "LevelResult", "exact_key_col", "match_level", "run_cascade"]
@@ -125,43 +124,7 @@ def _fuzzy_level(
         t1 = t1.filter(_full_middle_valid(F.trim(F.col("middle_name"))))
         t2 = t2.filter(_full_middle_valid(F.trim(F.col("middle_name"))))
 
-    t2e = t2.withColumn("_bdk", F.explode(bd_key_array_col(F.col("birthdate"), swap)))
-
-    if max_block is not None:
-        # oversized-block skip guard (advanced_matcher.rs:193-216):
-        # drops whole candidate lists keyed by the t2-side block key.
-        # The probe must then iterate t1's OWN swap keys too (the
-        # reference's :302-330 loop): a pair whose primary block was
-        # guarded away can still surface through the swap probe, so
-        # the guarded path keeps the two-side explode + pair dedup.
-        t2e = block_size_guard(t2e, F.col("_bdk"), max_block)
-        t1e = t1.withColumn(
-            "_bdk", F.explode(bd_key_array_col(F.col("birthdate"), swap))
-        )
-        pairs = pair_join(
-            t1e, t2e, lambda p: [F.col(f"{p}_bdk")]
-        ).dropDuplicates(["t1_id", "t2_id"])
-    else:
-        # UNGUARDED fast path: explode only the index side and probe
-        # with t1's exact date — the candidate set is identical
-        # (bd1 ∈ K2 iff K1 ∩ K2 != ∅, because month/day swap is an
-        # involution wherever both dates are valid: swap(bd1)=bd2
-        # implies bd2's day-part <= 12, so swap(bd2)=bd1 is defined;
-        # the residual bd_match_cond below re-checks the predicate
-        # anyway).  One explode instead of two, and since K2 is
-        # distinct each (t1, t2) pair joins at most once — the
-        # full-width dropDuplicates SortAggregate (a sort of every
-        # candidate row) disappears outright (round-6: cascade_l10
-        # 4.1 -> 2.9s; one Exchange + Sort fewer in the plan).
-        pairs = pair_join(
-            t1,
-            t2e,
-            lambda p: [F.col(f"{p}bd_str")],
-            lambda p: [F.col(f"{p}_bdk")],
-        )
-    pairs = pairs.filter(
-        bd_match_cond(F.col("t1_birthdate"), F.col("t2_birthdate"), swap)
-    )
+    pairs = birthdate_pairs(t1, t2, swap, max_block=max_block)
     scored = score_pairs(pairs, no_middle=(level == 11))
     scored = scored.filter(F.col("confidence") >= threshold)
     fields = (
@@ -169,9 +132,7 @@ def _fuzzy_level(
         if level == 10
         else ["fuzzy", "first_name", "last_name", "birthdate"]
     )
-    return scored.withColumn("matched_fields", F.array(*[F.lit(x) for x in fields])).drop(
-        "t1__bdk", "t2__bdk"
-    )
+    return scored.withColumn("matched_fields", F.array(*[F.lit(x) for x in fields]))
 
 
 def match_level(

@@ -8,10 +8,13 @@ Mirrors reference ``src/matching/birthdate_matcher.rs``:
   predicate into an equi-join — exactly Spark's preferred pattern)
 * ``birthdate_matches_naive`` — :85-95
 
-Spark side: ``bd_key_array_col`` builds the exploded-key column used
-by Algo 4 / L10 / Opt6 blocking (``F.explode`` of the distinct keys).
-All date arithmetic is JVM-side (``make_date`` returns NULL for
-invalid dates, matching ``from_ymd_opt``'s None).
+Spark side: ``bd_key_array_col`` builds the key array that
+``blocking.birthdate_pairs`` explodes, the one birthdate join behind
+Algo 1/2/4, L10/L11 and the Algo 4 driver queries.  ``bd_match_cond``
+is the predicate form, for joins not keyed on the date (Algo 3 and the
+Algo-3-blocked Algo 4).  All date arithmetic is JVM-side
+(``make_date`` returns NULL for invalid dates, matching
+``from_ymd_opt``'s None).
 """
 
 from __future__ import annotations
@@ -92,8 +95,8 @@ def swapped_bd_col(bd: Column) -> Column:
 
 def bd_key_array_col(bd: Column, allow_swap: bool) -> Column:
     """Array of distinct %Y-%m-%d keys ([d] or [d, swapped]) —
-    birthdate_matcher.rs:49-61.  Explode this on ONE side to turn the
-    swap predicate into an equi-join."""
+    birthdate_matcher.rs:49-61.  ``blocking.birthdate_pairs`` explodes
+    it to turn the swap predicate into an equi-join."""
     primary = F.date_format(bd, "yyyy-MM-dd")
     if not allow_swap:
         return F.array(primary)

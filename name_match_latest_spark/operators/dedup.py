@@ -9,7 +9,7 @@ engine-portable (DuckDB oracle uses the identical construction).
 * token_jaccard_pairs — token-set Jaccard via shingle explode + equi-join
   (the scalable near-dup join: |∩| by join-count, |∪| by inclusion-
   exclusion — no cross join anywhere)
-* minhash_signatures / minhash_lsh_candidates — MinHash + banded LSH:
+* minhash_signatures_wide / minhash_lsh_candidates — MinHash + banded LSH:
   shingle→minhash→band→bucket-join; candidate generation is an
   equi-join on (band_id, band_hash), never a cross join
 * simhash_fingerprints — 32-bit SimHash from md5 token hashes
@@ -30,7 +30,6 @@ __all__ = [
     "exact_dedup",
     "dedup_cluster_reps",
     "token_jaccard_pairs",
-    "minhash_signatures",
     "minhash_signatures_wide",
     "minhash_bands",
     "minhash_lsh_candidates",
@@ -325,20 +324,6 @@ def minhash_signatures_wide(docs: DataFrame, k: int = 8, shingle: int = 3) -> Da
         for i, (a, b) in enumerate(minhash_params(k))
     ]
     return hashed.groupBy("doc_id").agg(*mins)
-
-
-def minhash_signatures(docs: DataFrame, k: int = 8, shingle: int = 3) -> DataFrame:
-    """Long-format (doc_id, h_idx, sig) view of
-    :func:`minhash_signatures_wide` (compat shape for per-signature
-    analysis; the LSH path consumes the wide frame directly)."""
-    wide = minhash_signatures_wide(docs, k, shingle)
-    pairs = []
-    for i in range(k):
-        pairs += [F.lit(i), F.col(f"sig_{i}")]
-    stacked = wide.select(
-        "doc_id", F.explode(F.create_map(*pairs)).alias("h_idx", "sig")
-    )
-    return stacked
 
 
 def minhash_bands(

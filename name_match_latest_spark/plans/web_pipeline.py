@@ -64,14 +64,40 @@ MATCH_COLS = [
 ]
 
 
-def match_mentions(prepared: DataFrame) -> DataFrame:
-    """Self-match within blocks: candidate pairs with id1 < id2,
-    birthdate equality, full no-middle scoring cascade."""
-    pairs = pair_join(prepared, prepared, lambda p: [_block_key(p)])
-    pairs = pairs.filter(F.col("t1_id") < F.col("t2_id")).filter(
-        F.col("t1_birthdate") == F.col("t2_birthdate")
+def match_mentions(
+    left: DataFrame, right: DataFrame | None = None, broadcast_right: bool = False
+) -> DataFrame:
+    """Mention pairs in the same block with equal birthdates, scored by
+    the no-middle cascade.  Without ``right`` this is the self-match of
+    ``left`` (pairs with id1 < id2); with ``right`` it matches ``left``
+    against ``right`` (a mention never pairs with itself), broadcasting
+    ``right`` when asked."""
+    pairs = pair_join(
+        left,
+        left if right is None else right,
+        lambda p: [_block_key(p)],
+        broadcast_t2=broadcast_right,
     )
+    if right is None:
+        pairs = pairs.filter(F.col("t1_id") < F.col("t2_id"))
+    else:
+        pairs = pairs.filter(F.col("t1_id") != F.col("t2_id"))
+    pairs = pairs.filter(F.col("t1_birthdate") == F.col("t2_birthdate"))
     return score_pairs(pairs, no_middle=True)
+
+
+def _assign_clusters(prepared: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, url, mention_idx, cluster_id) for every prepared mention:
+    the connected component of the ``(src, dst)`` edges, or the
+    mention's own id when it has no edge.  The node universe is passed
+    explicitly: self-edge unions would inflate the canonicalizing
+    distinct, and deriving the nodes from the edge lineage would
+    re-execute the match join twice more."""
+    nodes = prepared.select("id", "url", "mention_idx")
+    cc = connected_components(edges.select("src", "dst"), nodes=nodes.select("id"))
+    return nodes.join(cc, nodes.id == cc.node, "left").select(
+        "id", "url", "mention_idx", F.coalesce("component", "id").alias("cluster_id")
+    )
 
 
 def cluster_pages(pages: DataFrame) -> DataFrame:
@@ -87,15 +113,7 @@ def cluster_pages(pages: DataFrame) -> DataFrame:
     edges = match_mentions(prepared).select(
         F.col("t1_id").alias("src"), F.col("t2_id").alias("dst")
     )
-    nodes = prepared.select("id", "url", "mention_idx")
-    # node universe passed explicitly: self-edge unions would inflate
-    # the canonicalizing distinct, and deriving nodes from the edge
-    # lineage would re-execute the match join twice more
-    cc = connected_components(edges, nodes=nodes.select("id"))
-    return nodes.join(cc, nodes.id == cc.node, "left").select(
-        "id", "url", "mention_idx",
-        F.coalesce("component", "id").alias("cluster_id"),
-    )
+    return _assign_clusters(prepared, edges)
 
 
 def run_resumable(
@@ -149,13 +167,7 @@ def run_resumable(
         # inside the persist scope: the node set reads `prepared`, and
         # unpersisting first would re-execute the extraction lineage
         edges_all = spark.read.parquet(os.path.join(out_dir, "edges"))
-        nodes = prepared.select("id", "url", "mention_idx")
-        cc = connected_components(
-            edges_all.select("src", "dst"), nodes=nodes.select("id")
-        )
-        clusters = nodes.join(cc, nodes.id == cc.node, "left").select(
-            "id", "url", "mention_idx", F.coalesce("component", "id").alias("cluster_id")
-        )
+        clusters = _assign_clusters(prepared, edges_all)
         cpath = os.path.join(out_dir, "clusters")
         clusters.orderBy("id").write.mode("overwrite").parquet(cpath)
     finally:

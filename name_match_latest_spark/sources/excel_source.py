@@ -107,7 +107,8 @@ def read_xlsx_rows(path: str) -> tuple[list[str], list[list[str | None]]]:
     if not raw_rows:
         return [], []
     width = max((max(r) + 1 for r in raw_rows if r), default=0)
-    headers = [raw_rows[0].get(i) or f"col_{i}" for i in range(width)]
+    # a blank header is named as spark.read.csv names it
+    headers = [raw_rows[0].get(i) or f"_c{i}" for i in range(width)]
     # a <row> with no valued cell (formatted but empty) is not a record
     rows = [[r.get(i) for i in range(width)] for r in raw_rows[1:] if r]
     return headers, rows

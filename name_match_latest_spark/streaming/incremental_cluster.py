@@ -54,11 +54,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.blocking import pair_join
 from ..operators.clustering import connected_components
-from ..operators.scoring import score_pairs
 from ..plans.checkpoint import AuditLog, atomic_write
-from ..plans.web_pipeline import _block_key, prepare_mentions
+from ..plans.web_pipeline import match_mentions, prepare_mentions
 from ..sources.tables import SnapshotTable
 
 __all__ = ["IncrementalClusterer", "checkpoint_lineage", "resolve_labels"]
@@ -492,9 +490,7 @@ class IncrementalClusterer:
         n_mentions = prepared.count()  # cheap: counts the checkpoint
 
         # within-batch self-match
-        within = self._match(prepared, prepared).filter(
-            F.col("t1_id") < F.col("t2_id")
-        )
+        within = match_mentions(prepared).select("t1_id", "t2_id")
         # batch vs accumulated corpus (pinned snapshot: replays after a
         # partial failure must not match the batch against itself).
         # The CORPUS is t1 and the batch is the BROADCAST t2 side: the
@@ -504,11 +500,11 @@ class IncrementalClusterer:
         # shuffle join the batch pipeline uses.
         if corpus_snap is not None:
             corpus = self.mentions.read(spark, corpus_snap)
-            cross = self._match(
+            cross = match_mentions(
                 corpus,
                 prepared,
                 broadcast_right=n_mentions <= BROADCAST_BATCH_MAX,
-            ).filter(F.col("t1_id") != F.col("t2_id"))
+            ).select("t1_id", "t2_id")
             new_edges = within.unionByName(cross)
         else:
             new_edges = within
@@ -655,20 +651,6 @@ class IncrementalClusterer:
             "node", F.coalesce(F.col("_new"), F.col("node")).alias("component")
         )
         return changed.unionByName(fresh_labeled)
-
-    def _match(
-        self,
-        left_prepared: DataFrame,
-        right_prepared: DataFrame,
-        broadcast_right: bool = False,
-    ) -> DataFrame:
-        pairs = pair_join(
-            left_prepared,
-            right_prepared,
-            lambda p: [_block_key(p)],
-            broadcast_t2=broadcast_right,
-        ).filter(F.col("t1_birthdate") == F.col("t2_birthdate"))
-        return score_pairs(pairs, no_middle=True).select("t1_id", "t2_id")
 
     def attach(self, pages_stream: DataFrame, checkpoint_dir: str):
         """Wire the clusterer to a STREAMING pages DataFrame; returns

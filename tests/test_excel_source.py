@@ -151,13 +151,13 @@ def test_col_index_inverts_col_letter():
 
 def test_read_rows_gaps_become_none(tmp_path):
     """A missing cell reads as None at its column; an unnamed header
-    column is named ``col_<i>``."""
+    column is named ``_c<i>``, as ``spark.read.csv`` names it."""
     from name_match_latest_spark.sources.xlsx import write_xlsx
 
     p = str(tmp_path / "gaps.xlsx")
     write_xlsx(p, {"s": (["id", None, "last"], [(1, "x", None), (None, None, "cruz")])})
     headers, rows = read_xlsx_rows(p)
-    assert headers == ["id", "col_1", "last"]
+    assert headers == ["id", "_c1", "last"]
     assert rows == [["1", "x", None], [None, None, "cruz"]]
 
 

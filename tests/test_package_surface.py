@@ -82,3 +82,32 @@ def test_every_module_is_reached_from_an_entry_point():
             seen.add(dep)
             todo.append(dep)
     assert known - seen == set(UNREACHED_ALLOWED)
+
+
+def _names(path):
+    """Every identifier ``path``'s source binds, reads or imports."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name
+
+
+def test_birthdate_keys_are_joined_in_one_module():
+    """The swap-aware birthdate key array is defined in ``dates`` and
+    exploded only by ``blocking.birthdate_pairs``: no other module
+    builds its own birthdate-key join."""
+    users = {
+        m for m in [pkg.__name__, *MODULES]
+        if "bd_key_array_col" in set(_names(_source_path(m)))
+    }
+    assert users == {
+        f"{pkg.__name__}.operators.dates",
+        f"{pkg.__name__}.operators.blocking",
+    }

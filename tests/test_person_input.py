@@ -40,6 +40,12 @@ CASES = {
         [("ana", "cruz", "1990-03-15", "a", "b", "r1"),
          ("ben", "reyes", "1985-01-02", None, "c", "r2")],
     ),
+    # a blank header, in rows with hash ids
+    "blank_header": (
+        ["first_name", "", "last_name", "birthdate"],
+        [("ana", "x", "cruz", "1990-03-15"),
+         ("ben", "y", "reyes", "1985-01-02")],
+    ),
     "geo_headers": (
         ["person_id", "first_name", "last_name", "birthdate", "barangay_code", "city_code"],
         [("1", "ana", "cruz", "1990-03-15", "B1", "C1"),
