@@ -1930,9 +1930,9 @@ def _cascade_summary(spark, sf_dir):
     """Per-level match counts + distinct matched ids of the exclusive
     L1/L2/L3/L10/L11 run — the reference's per-level progress summary
     (cascade.rs:888-903, xlsx Summary sheet per-level rows).  The
-    aggregation reuses the run's per-level frames (already cached by
-    run_cascade for the exclusion anti-joins), so the summary costs one
-    extra partial-agg pass, no re-execution of any level."""
+    aggregation reuses the run's per-level frames (cached and counted
+    by run_cascade), so the summary costs one extra partial-agg pass,
+    no re-execution of any level."""
     out = _exclusive_cascade_pairs(spark, sf_dir)
     return out.groupBy("level").agg(
         F.count("*").alias("n_matches"),

@@ -179,16 +179,27 @@ def run_cascade(
 ) -> list[LevelResult]:
     """Driver loop (cascade.rs:622-903): run levels in order; in
     exclusive mode, ids matched at level k are removed from BOTH sides
-    for levels > k via left-anti joins (cascade.rs:797-809).
+    for levels > k (cascade.rs:797-809).
 
     Both prepared sides are cached once at entry (the reference's
-    per-person fuzzy cache, mod.rs:418-463), so every level's join and
-    every exclusion anti-join reads the cached relation and the
-    per-person preparation UDFs run once per row for the whole
-    cascade, in both modes.  Each level's matches DataFrame is cached
-    and materialized (count) before the next level runs, since
-    exclusion depends on it; the anti-join builds are id-only
-    projections and broadcast-sized in practice.
+    per-person fuzzy cache, mod.rs:418-463), and every level reads
+    those two cached relations, so the per-person preparation UDFs run
+    once per row for the whole cascade, in both modes.  Each level's
+    matches DataFrame is cached and materialized (count) before the
+    next level runs.
+
+    Exclusion is one left-anti join per side against ``done``, the
+    union of the ``(t1_id, t2_id)`` projections of every earlier level
+    that matched.  A lazy ``localCheckpoint`` cuts each projection from
+    its level's lineage and fills from the level's cache during the
+    next level's first job, so it adds no job and a level's plan holds
+    id-set scans, not every earlier level's plan (chained anti-joins
+    over the previous levels' frames nest each plan inside the next,
+    and the driver re-analyses the whole tree on every call).  As with
+    ``connected_components``' per-round checkpoints, an id set lives
+    on the executors only and is lost with one; that trade is cheap
+    here, as the sets are two ``long`` columns.  Spark's ContextCleaner
+    frees them with the level frames that read them.
 
     Levels come back unsorted: ordering is the sinks' job (the CLI
     writers and ``write_matches_csv`` sort by ``(t1_id, t2_id)``).
@@ -196,9 +207,11 @@ def run_cascade(
     with ``unpersist_tracked`` once the results are consumed.
     """
     cfg = cfg or CascadeConfig()
-    rem1, rem2 = tracked_cache(t1), tracked_cache(t2)
+    t1, t2 = tracked_cache(t1), tracked_cache(t2)
+    rem1, rem2 = t1, t2
+    done: DataFrame | None = None
     out: list[LevelResult] = []
-    for level in cfg.levels:
+    for i, level in enumerate(cfg.levels):
         m = match_level(
             rem1,
             rem2,
@@ -210,9 +223,10 @@ def run_cascade(
         m = tracked_cache(m)
         count = m.count()
         out.append(LevelResult(level, m, count))
-        if cfg.exclusive and count > 0:
-            m1 = m.select(F.col("t1_id").alias("id")).distinct()
-            m2 = m.select(F.col("t2_id").alias("id")).distinct()
-            rem1 = rem1.join(m1, "id", "left_anti")
-            rem2 = rem2.join(m2, "id", "left_anti")
+        # after the last level nothing reads the id set
+        if cfg.exclusive and count > 0 and i + 1 < len(cfg.levels):
+            ids = m.select("t1_id", "t2_id").localCheckpoint(eager=False)
+            done = ids if done is None else done.union(ids)
+            rem1 = t1.join(done.select(F.col("t1_id").alias("id")), "id", "left_anti")
+            rem2 = t2.join(done.select(F.col("t2_id").alias("id")), "id", "left_anti")
     return out

@@ -95,6 +95,22 @@ def run_persons(spark, path):
     return (match_fuzzy(t1, t2).count(),)
 
 
+#: the CLI's cascade defaults (cli.py: --cascade-levels, --threshold)
+CASCADE_LEVELS = (1, 2, 3, 10, 11)
+
+
+def run_cascade_job(spark, path):
+    from name_match_latest_spark.operators.cascade import CascadeConfig, run_cascade
+    from name_match_latest_spark.operators.persons import prepare_persons
+
+    # read -> prepare both sides -> exclusive L1/L2/L3/L10/L11 cascade;
+    # every level is counted inside run_cascade
+    t1 = prepare_persons(spark.read.parquet(f"{path}/a"))
+    t2 = prepare_persons(spark.read.parquet(f"{path}/b"))
+    cfg = CascadeConfig(levels=list(CASCADE_LEVELS), threshold=0.95)
+    return tuple(lr.match_count for lr in run_cascade(t1, t2, cfg))
+
+
 def gen_pagerank(spark, n_edges, path):
     # scale-free-ish: src spread uniformly with a slice of hub srcs of
     # big fan-out via xxhash mixing, dst biased toward low ids
@@ -200,6 +216,11 @@ JOBS = {
     "persons": Job("algo3 fuzzy match (read -> prepare -> blocked fuzzy + "
                    "fallback tiers -> score), two tables of n_rows each",
                    "rows", 5_000_000, 8, gen_persons, run_persons, ("matches",)),
+    "cascade": Job("exclusive L1/L2/L3/L10/L11 cascade at the CLI defaults "
+                   "(read -> prepare -> per-level match and exclusion), two "
+                   "tables of n_rows each",
+                   "rows", 1_000_000, 8, gen_persons, run_cascade_job,
+                   tuple(f"L{level}" for level in CASCADE_LEVELS)),
     "pagerank": Job("pagerank x5 iterations (read edges -> rank -> checksum)",
                     "edges", 20_000_000, 8, gen_pagerank, run_pagerank,
                     ("rank_sum", "n_nodes")),

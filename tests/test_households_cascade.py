@@ -40,11 +40,17 @@ def test_households_vs_oracle(spark, fixture, option):
 
 
 @pytest.mark.parametrize("exclusive", [True, False])
-def test_cascade_vs_oracle(spark, fixture, exclusive):
+@pytest.mark.parametrize(
+    "levels",
+    # the second order runs fuzzy levels before exact ones: the cascade
+    # must honour the order it is given, not sort it
+    [[1, 2, 3, 5, 9, 10, 11], [11, 3, 10, 1, 9, 2, 5]],
+    ids=["ascending", "shuffled"],
+)
+def test_cascade_vs_oracle(spark, fixture, exclusive, levels):
     from name_match_latest_spark.operators.cascade import CascadeConfig, run_cascade
 
     t1, t2, d1, d2 = fixture
-    levels = [1, 2, 3, 5, 9, 10, 11]
     results = run_cascade(
         d1,
         d2,
@@ -63,6 +69,7 @@ def test_cascade_vs_oracle(spark, fixture, exclusive):
         )
         assert got_pairs == want[lr.level], f"level {lr.level}"
         total += len(got_pairs)
+    assert [lr.level for lr in results] == levels
     assert total > 0
 
 

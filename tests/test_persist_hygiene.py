@@ -7,6 +7,8 @@ baseline cache footprint.
 
 from __future__ import annotations
 
+import pytest
+
 
 def _persistent_ids(spark) -> set[int]:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -58,7 +60,27 @@ def test_fuzzy_matchers_release_caches(spark):
     assert _persistent_ids(spark) <= baseline
 
 
-def test_run_cascade_releases_caches(spark):
+def _logical_rdd_ids(dfs) -> set[int]:
+    """Ids of the RDDs behind every ``LogicalRDD`` (a checkpoint) in
+    the analysed plans of ``dfs``."""
+    ids = set()
+    stack = [df._jdf.queryExecution().analyzed() for df in dfs]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(int(node.rdd().id()))
+        children = node.children()
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+    return ids
+
+
+@pytest.mark.parametrize("exclusive", [True, False])
+def test_run_cascade_releases_caches(spark, exclusive):
+    """Every tracked cache is released; what stays persistent is
+    exactly the exclusion id sets (local checkpoints) the returned
+    level plans still read, which Spark's ContextCleaner frees with
+    those frames.  Independent mode leaves nothing behind."""
     from name_match_latest_spark.operators.cascade import CascadeConfig, run_cascade
     from name_match_latest_spark.oracle import generate_persons
     from name_match_latest_spark.plans.caching import unpersist_tracked
@@ -71,13 +93,17 @@ def test_run_cascade_releases_caches(spark):
     p1, p2 = generate_persons(80, seed=9)
     t1, t2 = persons_df(spark, p1), persons_df(spark, p2)
     levels = [1, 2, 3]
-    results = run_cascade(t1, t2, CascadeConfig(levels=levels, threshold=0.9))
-    total = sum(r.match_count for r in results)
-    assert total >= 0
+    results = run_cascade(
+        t1, t2, CascadeConfig(levels=levels, threshold=0.9, exclusive=exclusive)
+    )
+    assert sum(r.match_count for r in results[:-1]) > 0  # exclusion had ids
 
     # the two prepared sides plus one cache per level
     assert unpersist_tracked(blocking=True) == len(levels) + 2
-    assert _persistent_ids(spark) == baseline
+    # checkpoints the cascade added on top of its inputs' plans
+    id_sets = _logical_rdd_ids(r.matches for r in results) - _logical_rdd_ids([t1, t2])
+    assert bool(id_sets) == exclusive
+    assert _persistent_ids(spark) == baseline | id_sets
 
 
 def test_driver_query_wrapper_clears_previous(spark):

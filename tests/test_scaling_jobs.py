@@ -12,7 +12,10 @@ import sys
 
 import pytest
 
-SIZES = {"web": 200, "persons": 500, "pagerank": 2000, "lm": 50, "events": 4000}
+SIZES = {
+    "web": 200, "persons": 500, "cascade": 500, "pagerank": 2000, "lm": 50,
+    "events": 4000,
+}
 
 
 @functools.cache
